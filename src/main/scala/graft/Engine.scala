@@ -5,118 +5,103 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-import graft.plans.{CosineSimF, DistSqF, FingerprintHash, SortedIntersectCount}
+import graft.plans._
 
 /** Session-level integration: a SparkSessionExtensions hook that makes
-  * the graft native expressions first-class SQL functions, and a
-  * session factory with the settings every graft deployment wants
-  * (AQE, sane shuffle parallelism, UTC).
+  * the graft rules, planner strategies, SQL productions and native
+  * expressions part of a session, and a session factory with the
+  * settings every graft deployment wants (AQE, sane shuffle
+  * parallelism, UTC).
   *
-  * Deployments that can't pass `withExtensions` (e.g. the driver's own
-  * harness session) get the same functions via the per-query
-  * `register(spark)` calls inside the query functions — both paths are
-  * idempotent.
+  * This hook is the only way graft reaches a session. A supported
+  * session is one built by [[Engine.session]], or any session started
+  * with `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions._
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     // Custom logical operators: lowered right after resolution so the
     // optimizer and planner only ever see standard nodes.
-    ext.injectPostHocResolutionRule(_ => graft.plans.RewriteDistinctOn)
+    ext.injectPostHocResolutionRule(_ => RewriteDistinctOn)
     // Opt-in optimizer rewrite: point-in-interval theta join →
     // bucket-expansion equi-join (spark.graft.rangeJoin.bucketWidth).
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
+    ext.injectOptimizerRule(_ => RangeJoinRewrite)
     // Opt-in optimizer rewrite: keyed band join (equi-key + point in
     // interval) → the sorted-sweep BandJoinPlan
     // (spark.graft.bandJoin.enabled).
-    ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
+    ext.injectOptimizerRule(_ => BandJoinRewrite)
     // Whole-operator physical extension: AsOfJoinPlan survives to the
     // planner, where this strategy turns it into AsOfJoinExec (the
     // sorted-merge as-of join).
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     // Keyed band/interval join: sorted sweep instead of hash-join +
     // post-filter all-pairs (BandJoinPlan -> BandJoinExec).
-    ext.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)
+    ext.injectPlannerStrategy(_ => BandJoinStrategy)
     // Custom SQL productions (GRAFT MATCH / GRAFT DISTINCT ON);
     // everything else delegates to Spark's parser.
     ext.injectParser { (session, delegate) =>
-      new graft.plans.GraftSqlParser(() => session, delegate)
+      new GraftSqlParser(() => session, delegate)
     }
-    ext.injectFunction(fn("graft_cosine") {
-      exprs => CosineSimF(exprs(0), exprs(1))
-    })
-    ext.injectFunction(fn("graft_dist_sq") {
-      exprs => DistSqF(exprs(0), exprs(1))
-    })
-    ext.injectFunction(fn("graft_fingerprint") {
-      exprs => FingerprintHash(exprs.head, 256)
-    })
-    ext.injectFunction(fn("graft_sorted_intersect_count") {
-      exprs => SortedIntersectCount(exprs(0), exprs(1))
-    })
-    // basket-mining combination generators: registered at session
-    // build so BasketOps.pairColumn/tripleColumn (and plain SQL)
-    // resolve without depending on a prior withCappedItems call
-    // having run its per-query register side effect
-    ext.injectFunction(fn("graft_pairs") {
-      exprs => graft.plans.ArrayPairs(exprs.head)
-    })
-    ext.injectFunction(fn("graft_triples") {
-      exprs => graft.plans.ArrayTriples(exprs.head)
-    })
-    ext.injectFunction(fn("graft_topk") {
-      exprs => graft.plans.SpaceSavingTopK.fromExprs(exprs)
-    })
-    ext.injectFunction(fn("graft_topk_by") {
-      exprs => graft.plans.TopKBy.fromExprs(exprs)
-    })
-    ext.injectFunction(fn("graft_cms") {
-      exprs => graft.plans.CountMinSketch.aggFromExprs(exprs)
-    })
-    ext.injectFunction(fn("graft_cms_estimate") {
-      exprs => graft.plans.CountMinSketch.estFromExprs(exprs)
-    })
-    ext.injectFunction(fn("graft_bloom_agg") {
-      exprs => graft.plans.BloomPrune.aggExpr(exprs)
-    })
-    ext.injectFunction(fn("graft_bloom_contains") {
-      exprs => graft.plans.BloomPrune.containsExpr(exprs)
-    })
-    // theta/KMV sketch family: distinct sketches with SET ALGEBRA
-    // (intersect / a-not-b — what HLL can't do) + stored-sketch
-    // re-aggregation; every client surface (shell, JDBC, HTTP) gets
-    // the functions in plain SQL
-    ext.injectFunction(fn("graft_theta") {
-      exprs => graft.plans.ThetaSketch.aggFromExprs(exprs)
-    })
-    ext.injectFunction(fn("graft_theta_merge") {
-      exprs => graft.plans.ThetaMergeAgg(exprs.head)
-    })
-    ext.injectFunction(fn("graft_theta_estimate") {
-      exprs => graft.plans.ThetaEstimate(exprs.head)
-    })
-    ext.injectFunction(fn("graft_theta_union") {
-      exprs => graft.plans.ThetaUnion(exprs(0), exprs(1))
-    })
-    ext.injectFunction(fn("graft_theta_intersect") {
-      exprs => graft.plans.ThetaIntersect(exprs(0), exprs(1))
-    })
-    ext.injectFunction(fn("graft_theta_anotb") {
-      exprs => graft.plans.ThetaANotB(exprs(0), exprs(1))
-    })
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }
 
 object GraftExtensions {
-  private type FnDesc =
+  type FnDesc =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private def fn(name: String)(
-      builder: Seq[Expression] => Expression): FnDesc = {
-    val ident = FunctionIdentifier(name)
+  /** Every graft SQL function: its name, the argument counts it
+    * accepts, and its builder. */
+  val functions: Seq[FnDesc] = Seq(
+    // vectors
+    fn("graft_cosine", 2)(es => CosineSimF(es(0), es(1))),
+    fn("graft_dist_sq", 2)(es => DistSqF(es(0), es(1))),
+    fn("graft_dot", 2)(es => DotF(es(0), es(1))),
+    // text
+    fn("graft_fingerprint", 1)(es => FingerprintHash(es(0), 256)),
+    fn("graft_sorted_intersect_count", 2)(
+      es => SortedIntersectCount(es(0), es(1))),
+    fn("graft_minhash", 2)(TextExpressions.minhash),
+    fn("graft_shingle_hashes", 2)(TextExpressions.shingleHashes),
+    fn("graft_simhash64", 1)(es => Simhash64(es(0))),
+    fn("graft_window_hashes", 2)(TextExpressions.windowHashes),
+    fn("graft_jaro_winkler", 2)(es => JaroWinkler(es(0), es(1))),
+    // basket-mining combination generators
+    fn("graft_pairs", 1)(es => ArrayPairs(es(0))),
+    fn("graft_triples", 1)(es => ArrayTriples(es(0))),
+    // scan folds over ordered arrays
+    fn("graft_ewma_chart", 5)(
+      es => EwmaChartScan(es(0), es(1), es(2), es(3), es(4))),
+    fn("graft_kalman_scan", 3)(ScanFolds.kalman),
+    fn("graft_holt_scan", 3)(ScanFolds.holt),
+    fn("graft_ewma_smooth_scan", 2)(ScanFolds.ewmaSmooth),
+    fn("graft_hw_scan", 5)(ScanFolds.holtWinters),
+    // top-k and frequency sketches
+    fn("graft_topk", 2, 3)(SpaceSavingTopK.fromExprs),
+    fn("graft_topk_by", 4)(TopKBy.fromExprs),
+    fn("graft_cms", 3)(CountMinSketch.aggFromExprs),
+    fn("graft_cms_estimate", 4)(CountMinSketch.estFromExprs),
+    fn("graft_bloom_agg", 3)(BloomPrune.aggExpr),
+    fn("graft_bloom_contains", 2)(BloomPrune.containsExpr),
+    // theta/KMV distinct sketches with set algebra (intersect and
+    // a-not-b, which HLL can't do) and stored-sketch re-aggregation
+    fn("graft_theta", 1, 2)(ThetaSketch.aggFromExprs),
+    fn("graft_theta_merge", 1)(es => ThetaMergeAgg(es(0))),
+    fn("graft_theta_estimate", 1)(es => ThetaEstimate(es(0))),
+    fn("graft_theta_union", 2)(es => ThetaUnion(es(0), es(1))),
+    fn("graft_theta_intersect", 2)(es => ThetaIntersect(es(0), es(1))),
+    fn("graft_theta_anotb", 2)(es => ThetaANotB(es(0), es(1))))
+
+  /** A function description whose builder first checks the argument
+    * count, so a wrong call names the function and what it accepts. */
+  private def fn(name: String, counts: Int*)(
+      build: Seq[Expression] => Expression): FnDesc = {
     val info = FunctionRegistryBase.expressionInfo[Expression](name, None)
-    (ident, info, builder)
+    (FunctionIdentifier(name), info, { es =>
+      require(counts.contains(es.size),
+        s"$name takes ${counts.mkString(" or ")} argument(s), " +
+          s"got ${es.size}")
+      build(es)
+    })
   }
 }
 
@@ -160,6 +145,10 @@ object Engine {
       // (~KBs each), trivial next to executor memory.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.sql.session.timeZone", "UTC")
+      // The events testdata has shipped `ts` as TIMESTAMP(NANOS), which
+      // the parquet reader accepts only as LongType nanos;
+      // Tables.normalizeEventsTs turns every layout into TIMESTAMP.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 }

@@ -32,23 +32,20 @@ final class Tables(val spark: SparkSession, val dir: String) {
   /** events, with `ts` normalized to TIMESTAMP whatever the physical
     * parquet layout is. The testdata has shipped `ts` two ways across
     * rounds — TIMESTAMP(NANOS) (which Spark's vectorized reader only
-    * accepts via nanosAsLong=true, yielding a LongType of nanos) and
-    * plain timestamp[us] with isAdjustedToUTC=false (which Spark reads
-    * as TIMESTAMP_NTZ). Branch on the type actually read instead of
-    * assuming a layout; both land on TimestampType under the session's
-    * UTC discipline, matching DuckDB's naive-timestamp view of the
-    * same files. */
-  def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.normalizeEventsTs(table("events"))
-  }
+    * accepts via nanosAsLong=true, set by Engine.session, yielding a
+    * LongType of nanos) and plain timestamp[us] with
+    * isAdjustedToUTC=false (which Spark reads as TIMESTAMP_NTZ).
+    * Branch on the type actually read instead of assuming a layout;
+    * both land on TimestampType under the session's UTC discipline,
+    * matching DuckDB's naive-timestamp view of the same files. */
+  def events: DataFrame = Tables.normalizeEventsTs(table("events"))
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")
 
   /** Register all tables as temp views for spark.sql(...) queries.
     * Uses the per-table accessors so `events` gets the nanos->micros
-    * treatment (a raw table("events") read throws on the
-    * TIMESTAMP(NANOS) column in a fresh session). */
+    * treatment (a raw table("events") read of the TIMESTAMP(NANOS)
+    * layout yields LongType nanos). */
   def registerAll(): Unit = {
     val dfs = Map(
       "region" -> region, "nation" -> nation, "customer" -> customer,

@@ -74,8 +74,7 @@ object ExternalFunctions {
           args(n.stripPrefix("__arg").toInt)
       }
     }
-    // source must be one of Spark's known kinds; "built-in" is what
-    // the other graft native functions register as
+    // source must be one of Spark's known kinds
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(fnName, builder, "built-in")
     spark.conf.set(confPrefix + fnName, providerName)

@@ -23,12 +23,9 @@ object BasketOps {
 
   /** Adds `capped` (first `cap` items of the sorted `itemsCol` array)
     * and `n_dropped` (how many items the cap cut — 0 everywhere the
-    * cap is inactive). Also registers the native pair/triple
-    * generators, so [[pairColumn]]/[[tripleColumn]] resolve on this
-    * session. */
+    * cap is inactive). */
   def withCappedItems(baskets: DataFrame, itemsCol: String,
       cap: Int = DefaultItemCap): DataFrame = {
-    graft.plans.ArrayCombos.register(baskets.sparkSession)
     baskets
       .withColumn("capped", slice(col(itemsCol), 1, cap))
       .withColumn("n_dropped",

@@ -22,7 +22,6 @@ object DedupOps {
     * whole pipeline is replicable by the SQL oracle bit-for-bit.
     */
   def minhashSignature(docs: DataFrame, textCol: String, k: Int): DataFrame = {
-    graft.plans.TextExpressions.register(docs.sparkSession)
     docs
       .withColumn("_toks", TextFunctions.tokenSet(col(textCol)))
       .withColumn("_th", expr(
@@ -193,7 +192,6 @@ object DedupOps {
     val tag = f"edges_${CacheFs.AlgoVersion}_${fp}_p${planes}" +
       f"_t${(threshold * 1000).round}%d_b$maxBucket"
     val published = CacheFs.getOrBuild(spark, tag) { stage =>
-      graft.plans.VectorExpressions.register(spark)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       cosineCandidatePairs(emb, planes, threshold, maxBucket)
         .write.mode("overwrite").parquet(stage)
@@ -259,7 +257,6 @@ object DedupOps {
       docs: DataFrame, idCol: String, textCol: String,
       tNum: Int, tDen: Int): DataFrame = {
     require(tNum > 0 && tNum <= tDen, s"threshold $tNum/$tDen not in (0,1]")
-    graft.plans.TextExpressions.register(docs.sparkSession)
     val d = docs.select(col(idCol).as("_id"),
       array_distinct(expr(s"graft_shingle_hashes($textCol, 2)")).as("_bg"))
     // global document frequency per element (the canonical order key)
@@ -346,7 +343,6 @@ object DedupOps {
     * lambdas run interpreted, while this shape stays entirely inside
     * whole-stage codegen with map-side combine. */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.plans.TextExpressions.register(docs.sparkSession)
     // Native per-row bit votes (graft.plans.Simhash64): integer
     // arithmetic identical to the explode -> two-groupBy formulation
     // (and the SQL oracle), with zero shuffled rows instead of
@@ -526,8 +522,6 @@ object DedupOps {
   def containmentJoin(docs: DataFrame, idCol: String, textCol: String,
       num: Int, den: Int, minShingles: Int = 5, k: Int = 3): DataFrame = {
     require(num > 0 && den >= num, s"threshold $num/$den not in (0,1]")
-    val spark = docs.sparkSession
-    graft.plans.TextExpressions.register(spark)
     val d = CacheScope.scoped(docs.select(
       col(idCol).as("doc_id"),
       array_distinct(expr(s"graft_shingle_hashes($textCol, $k)")).as("sh")))

@@ -16,34 +16,23 @@ object ExtendedOps {
 
   /** DISTINCT ON through the custom logical operator
     * (graft.plans.DistinctOnPlan): keep, per distinct key tuple, the
-    * first row under `order` ((column, ascending) pairs).
-    *
-    * When the session carries GraftExtensions the injected
-    * RewriteDistinctOn rule lowers the node during analysis; for
-    * extension-less sessions the same lowering is applied here, so
-    * behavior is identical either way.
+    * first row under `order` ((column, ascending) pairs). The
+    * RewriteDistinctOn rule that GraftExtensions injects lowers the
+    * node during analysis.
     */
   def distinctOn(
       df: DataFrame, keys: Seq[String],
       order: Seq[(String, Boolean)]): DataFrame = {
     import org.apache.spark.sql.GraftBridge
-    import graft.plans.{DistinctOnPlan, RewriteDistinctOn}
-    val node = DistinctOnPlan.resolved(
-      df.queryExecution.analyzed, keys, order)
-    val viaExtension = GraftBridge.ofRows(df.sparkSession, node)
-    val analyzed = viaExtension.queryExecution.analyzed
-    val stillCustom =
-      analyzed.collectFirst { case d: DistinctOnPlan => d }.isDefined
-    if (stillCustom)
-      GraftBridge.ofRows(df.sparkSession, RewriteDistinctOn(analyzed))
-    else viaExtension
+    import graft.plans.DistinctOnPlan
+    GraftBridge.ofRows(df.sparkSession,
+      DistinctOnPlan.resolved(df.queryExecution.analyzed, keys, order))
   }
 
   /** ALIGN via the custom physical operator (graft.plans.AsOfJoinExec):
     * each probe row gets the latest `ref` row of the same key
     * at-or-before its ordinal, or nulls. The planner strategy is
-    * injected by GraftExtensions; extension-less sessions get it via
-    * experimental.extraStrategies here (idempotent).
+    * injected by GraftExtensions.
     *
     * Output: all probe columns, then ref's columns minus the shared
     * key/ordinal columns (nullable). Ref column names must not collide
@@ -55,11 +44,8 @@ object ExtendedOps {
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
     import org.apache.spark.sql.catalyst.plans.logical.Project
-    import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
+    import graft.plans.AsOfJoinPlan
     val spark = probe.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val lplan = probe.queryExecution.analyzed
     // probe and ref often share lineage (self-as-of) — re-alias the
     // right side so the node's attribute ids are disjoint
@@ -97,11 +83,8 @@ object ExtendedOps {
     import org.apache.spark.sql.catalyst.expressions.{Alias, And,
       Attribute, Expression, IsNotNull}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    import graft.plans.{BandJoinPlan, BandJoinStrategy}
+    import graft.plans.BandJoinPlan
     val spark = points.sparkSession
-    if (!spark.experimental.extraStrategies.contains(BandJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ BandJoinStrategy
     val lplan = points.queryExecution.analyzed
     // the sides often share lineage (self-band-join) — re-alias the
     // right side so the node's attribute ids are disjoint
@@ -345,8 +328,6 @@ object ExtendedOps {
       probeKey: String, dimKey: String,
       expectedItems: Long = 1L << 20, numBits: Long = 1L << 23)
       : DataFrame = {
-    val spark = probe.sparkSession
-    graft.plans.BloomPrune.register(spark)
     val sketch = dim
       .agg(call_function("graft_bloom_agg", col(dimKey),
         lit(expectedItems), lit(numBits)).as("sk"))

@@ -37,8 +37,6 @@ object LinkOps {
     */
   def phoneticLink(dirty: DataFrame, dirtyCol: String,
       clean: DataFrame, cleanCol: String, minJw: Double): DataFrame = {
-    val spark = dirty.sparkSession
-    graft.plans.LinkExpressions.register(spark)
     val c = clean.select(col(cleanCol).cast("string").as("cname"))
       .distinct()
       .withColumn("blk", expr(phoneticSql("cname")))

@@ -39,7 +39,6 @@ object MLOps {
     * logisticTrain's weight vector. Tie-break unchanged: struct
     * comparison on (d2, c_label) is min_by's (d2, c_label) order. */
   def assign(vectors: DataFrame, cents: DataFrame): DataFrame = {
-    graft.plans.VectorExpressions.register(vectors.sparkSession)
     val model = cents
       .select(col("c_label").cast("int"),
         transform(col("centroid"), v => v.cast("double")))
@@ -70,7 +69,6 @@ object MLOps {
     * `flagCol` (reference FLAG) marks which rows were filled. */
   def imputeWith(df: DataFrame, colName: String, cents: DataFrame,
       flagCol: Option[String]): DataFrame = {
-    graft.plans.VectorExpressions.register(df.sparkSession)
     val model = cents
       .select(col("c_label").cast("int"),
         transform(col("centroid"), v => v.cast("double")))
@@ -208,7 +206,6 @@ object MLOps {
     * sums of the float elements divided by the member count. */
   private def trainKmeans(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
     val spark = vecs.sparkSession
-    graft.plans.VectorExpressions.register(spark)
     import spark.implicits._
     // deterministic init: the k lowest vec_ids. A partition-local
     // filter (ids are dense from 0), not a global-sort row_number —
@@ -258,8 +255,6 @@ object MLOps {
     * `target` must be 0/1; features ride in an array column. */
   def logisticTrain(df: DataFrame, featCol: String, targetCol: String,
       iters: Int, lr: Double): (Array[Double], Double) = {
-    val spark = df.sparkSession
-    graft.plans.VectorExpressions.register(spark)
     // few wide rows: coalesce the persisted training frame so each
     // GD round schedules a handful of tasks, not a full shuffle
     // fan-out — the per-round job overhead IS the training cost at
@@ -269,15 +264,16 @@ object MLOps {
         transform(col(featCol), x => x.cast("double")).as("x"),
         col(targetCol).cast("double").as("y"))
       .coalesce(8).persist()
-    // one action for both scalars (count also materializes the
-    // persisted frame); dims is constant per row, so first() is
-    // deterministic here
-    val nd = data.agg(count(lit(1)), first(size(col("x")))).head
-    val n = nd.getLong(0).toDouble
-    val dims = nd.getInt(1)
-    var w = Array.fill(dims)(0.0)
-    var b = 0.0
     try {
+      // one action for both scalars (count also materializes the
+      // persisted frame); dims is constant per row, so first() is
+      // deterministic here
+      val nd = data.agg(count(lit(1)), first(size(col("x")))).head
+      require(nd.getLong(0) > 0L, "logisticTrain: the training frame is empty")
+      val n = nd.getLong(0).toDouble
+      val dims = nd.getInt(1)
+      var w = Array.fill(dims)(0.0)
+      var b = 0.0
       for (_ <- 1 to iters) {
         // typedLit reference-object literals for BOTH the weight
         // vector and the bias (not inlined scalar constants): the
@@ -307,8 +303,8 @@ object MLOps {
         w = w.indices.map(i => w(i) - lr / n * g.getDouble(i)).toArray
         b = b - lr / n * g.getDouble(dims)
       }
+      (w, b)
     } finally data.unpersist(blocking = false)
-    (w, b)
   }
 
   /** Standardize an array feature column to zero mean / unit variance
@@ -342,7 +338,6 @@ object MLOps {
     * probe (exact decimal sum, deterministic). */
   def logisticLoss(df: DataFrame, featCol: String, targetCol: String,
       w: Array[Double], b: Double): Double = {
-    graft.plans.VectorExpressions.register(df.sparkSession)
     val wLit = array(w.toIndexedSeq.map(lit): _*)
     df.select(transform(col(featCol), x => x.cast("double")).as("x"),
         col(targetCol).cast("double").as("y"))

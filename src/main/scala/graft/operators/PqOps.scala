@@ -53,8 +53,6 @@ object PqOps {
     * (the per-vector argmin aggregation); the codebook side is
     * broadcast. Output: vec_id, code_0..code_{M-1}, recon. */
   def encode(embeddings: DataFrame, m: Int, ks: Int, dim: Int): DataFrame = {
-    val spark = embeddings.sparkSession
-    graft.plans.VectorExpressions.register(spark)
     val sub = dim / m
     val cb = codebooks(embeddings, m, ks, dim)
     val joined = embeddings.crossJoin(broadcast(cb))
@@ -84,9 +82,6 @@ object PqOps {
     * excluded. Output: q_id, vec_id, cos, rk. */
   def search(embeddings: DataFrame, m: Int, ks: Int, dim: Int,
       nQueries: Int, nCandidates: Int, k: Int): DataFrame = {
-    val spark = embeddings.sparkSession
-    graft.plans.VectorExpressions.register(spark)
-    graft.plans.TopKBy.register(spark)
     val coded = encode(embeddings, m, ks, dim)
     // qe (double) drives ADC against the double recon; qf (raw float)
     // drives the exact re-rank (graft_cosine is monomorphic per type)

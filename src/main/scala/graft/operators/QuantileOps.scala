@@ -44,6 +44,10 @@ object QuantileOps {
   def percentileDisc(df: DataFrame, groupCol: String, valueCol: String,
       ps: Seq[(String, Double)], buckets: Int = 1024): DataFrame = {
     require(ps.nonEmpty && buckets >= 2)
+    ps.foreach { case (name, p) =>
+      require(p > 0.0 && p <= 1.0,
+        s"percentileDisc: $name = $p is outside (0, 1]")
+    }
     val g = col(groupCol)
     val v = col(valueCol)
 

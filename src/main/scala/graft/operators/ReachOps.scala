@@ -24,7 +24,6 @@ object ReachOps {
 
   def reach(df: DataFrame, keyCol: String, segCol: String,
       k: Int = 65536): DataFrame = {
-    graft.plans.ThetaSketch.register(df.sparkSession)
     val sk = df.groupBy(col(segCol).as("seg"))
       .agg(expr(s"graft_theta($keyCol, $k)").as("sk"))
     sk.as("a").join(sk.as("b"), col("a.seg") < col("b.seg"))

@@ -23,7 +23,6 @@ object SmoothOps {
     * second on: (time, actual, one-step pred, gain, filtered). */
   def kalman(df: DataFrame, timeCol: String, valueCol: String,
       q: Double, r: Double): DataFrame = {
-    graft.plans.ScanFolds.register(df.sparkSession)
     val series = df
       .select(col(timeCol).as("t"), col(valueCol).cast("double").as("x"))
       .agg(sort_array(collect_list(struct(col("t"), col("x")))).as("xs"))
@@ -48,7 +47,6 @@ object SmoothOps {
     * the oracle writes). */
   def holt(df: DataFrame, timeCol: String, valueCol: String,
       alpha: Double, beta: Double): DataFrame = {
-    graft.plans.ScanFolds.register(df.sparkSession)
     val series = df
       .select(col(timeCol).as("t"), col(valueCol).cast("double").as("x"))
       .agg(sort_array(collect_list(struct(col("t"), col("x")))).as("xs"))
@@ -85,7 +83,6 @@ object SmoothOps {
     * the oracle hash — are unchanged). */
   def ewma(df: DataFrame, timeCol: String, valueCol: String,
       lambda: Double, l: Double): DataFrame = {
-    graft.plans.ScanFolds.register(df.sparkSession)
     val series = df
       .select(col(timeCol).as("t"), col(valueCol).cast("double").as("x"))
       .agg(sort_array(collect_list(struct(col("t"), col("x")))).as("xs"))
@@ -119,7 +116,6 @@ object SmoothOps {
   def holtWinters(df: DataFrame, timeCol: String, valueCol: String,
       m: Int, alpha: Double, beta: Double, gamma: Double): DataFrame = {
     require(m >= 2, s"season length $m must be >= 2")
-    graft.plans.ScanFolds.register(df.sparkSession)
     val series = df
       .select(col(timeCol).as("t"), col(valueCol).cast("double").as("x"))
       .agg(sort_array(collect_list(struct(col("t"), col("x")))).as("xs"))

@@ -1,9 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
+import graft.sources.CacheFs
 
 /** Okapi BM25 ranked retrieval as a relational plan (the reference's
   * text-search surface re-expressed Spark-first; sclera exposes search
@@ -65,7 +67,6 @@ object TextSearchOps {
   def queryLikelihood(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k: Int, mu: Double = 300.0): DataFrame = {
     require(terms.nonEmpty, "query likelihood needs at least one term")
-    graft.plans.TopKBy.register(docs.sparkSession)
     val base = CacheScope.scoped(tfProjection(docs, idCol, textCol, terms))
     val statCols: Seq[Column] =
       Seq(sum(col("dl")).cast("double").as("tokens")) ++
@@ -94,7 +95,6 @@ object TextSearchOps {
            terms: Seq[String], k: Int,
            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "GRAFT SEARCH needs at least one query term")
-    graft.plans.TopKBy.register(docs.sparkSession)
     val base = CacheScope.scoped(tfProjection(docs, idCol, textCol, terms))
     // 1-row corpus statistics; joins back via broadcast, never .head()
     val statCols: Seq[Column] =
@@ -241,31 +241,30 @@ object TextSearchOps {
     * double-appending. */
   def applyBatchIdempotent(batch: DataFrame, idCol: String,
       textCol: String, indexDir: String, tag: String): Unit = {
-    import java.io.File
-    val root = new File(indexDir)
-    root.mkdirs()
-    val applied = new File(root, s"_applied_$tag")
-    if (applied.exists()) return
-    val bootTag = root.listFiles()
-      .collectFirst { case f if f.getName.startsWith("_bootstrap_") =>
-        f.getName.stripPrefix("_bootstrap_")
-      }
+    val spark = batch.sparkSession
+    val root = new Path(indexDir)
+    val fs = CacheFs.fs(spark, root)
+    fs.mkdirs(root)
+    val applied = s"_applied_$tag"
+    if (fs.exists(new Path(root, applied))) return
+    def names = fs.listStatus(root).map(_.getPath.getName)
+    val bootTag = names.collectFirst {
+      case n if n.startsWith("_bootstrap_") => n.stripPrefix("_bootstrap_")
+    }
     if (!indexComplete(indexDir) || bootTag.contains(tag)) {
       // intent BEFORE the build: a replay of this batch must rebuild
       // (overwrite semantics), never append on top of its own output
-      new File(root, s"_bootstrap_$tag").createNewFile()
+      CacheFs.touch(spark, indexDir, s"_bootstrap_$tag")
       buildIndex(batch, idCol, textCol, indexDir)
       // the rebuild overwrote the component dirs, wiping any batches
       // appended after the original bootstrap — drop their markers so
       // the at-least-once source's re-delivery re-applies them
       // instead of being suppressed by stale markers
-      root.listFiles()
-        .filter(f => f.getName.startsWith("_applied_")
-          && f.getName != s"_applied_$tag")
-        .foreach(_.delete())
+      names.filter(n => n.startsWith("_applied_") && n != applied)
+        .foreach(n => fs.delete(new Path(root, n), false))
     } else {
-      clearTagged(root, tag)
-      val stage = new File(root, s"_stage_$tag")
+      clearTagged(fs, root, tag)
+      val stage = new Path(root, s"_stage_$tag")
       val toks = batch
         .select(col(idCol), TF.regexTokens(col(textCol)).as("toks"))
         .persist()
@@ -286,57 +285,43 @@ object TextSearchOps {
             lit(0.0)).as("sum_dl"))
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/stats")
       toks.unpersist()
-      moveFlat(new File(stage, "doclen"), new File(root, "doclen"), tag)
-      movePartitioned(new File(stage, "postings"),
-        new File(root, "postings"), tag)
-      moveFlat(new File(stage, "stats"), new File(root, "stats"), tag)
-      deleteRec(stage)
+      moveFlat(fs, new Path(stage, "doclen"), new Path(root, "doclen"), tag)
+      fs.listStatus(new Path(stage, "postings"))
+        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+        .foreach { pd =>
+          moveFlat(fs, pd.getPath,
+            new Path(root, s"postings/${pd.getPath.getName}"), tag)
+        }
+      moveFlat(fs, new Path(stage, "stats"), new Path(root, "stats"), tag)
+      fs.delete(stage, true)
     }
-    applied.createNewFile()
-    ()
+    CacheFs.touch(spark, indexDir, applied)
   }
 
   /** Remove every `b<tag>_*` file a previous torn attempt left. */
-  private def clearTagged(root: java.io.File, tag: String): Unit = {
-    def sweep(dir: java.io.File): Unit =
-      Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
-        if (f.isDirectory) sweep(f)
-        else if (f.getName.startsWith(s"b${tag}_")) f.delete()
-      }
-    sweep(root)
-  }
-
-  private def partFiles(dir: java.io.File): Seq[java.io.File] =
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")
-        && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .sortBy(_.getName).toSeq
-
-  private def moveFlat(stage: java.io.File, target: java.io.File,
-      tag: String): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    target.mkdirs()
-    partFiles(stage).zipWithIndex.foreach { case (f, i) =>
-      Files.move(f.toPath,
-        new java.io.File(target, s"b${tag}_p$i.parquet").toPath,
-        StandardCopyOption.REPLACE_EXISTING)
+  private def clearTagged(fs: FileSystem, root: Path, tag: String): Unit = {
+    val it = fs.listFiles(root, true)
+    val torn = scala.collection.mutable.ArrayBuffer.empty[Path]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.startsWith(s"b${tag}_")) torn += p
     }
+    torn.foreach(fs.delete(_, false))
   }
 
-  private def movePartitioned(stage: java.io.File,
-      target: java.io.File, tag: String): Unit = {
-    Option(stage.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.contains("="))
-      .sortBy(_.getName)
-      .foreach { pd =>
-        moveFlat(pd, new java.io.File(target, pd.getName), tag)
+  /** Move a staged directory's part files into `target` under
+    * deterministic `b<tag>_p<i>` names (i in part-name order). */
+  private def moveFlat(fs: FileSystem, stage: Path, target: Path,
+      tag: String): Unit = {
+    fs.mkdirs(target)
+    fs.listStatus(stage).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet")
+        && !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .sortBy(_.getName).zipWithIndex.foreach { case (p, i) =>
+        val dst = new Path(target, s"b${tag}_p$i.parquet")
+        if (!fs.rename(p, dst))
+          throw new java.io.IOException(s"could not move $p to $dst")
       }
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete()
-    ()
   }
 
   /** BM25 top-k against a prebuilt index: reads ONLY the query terms'
@@ -346,7 +331,6 @@ object TextSearchOps {
       indexDir: String, idCol: String, terms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "GRAFT SEARCH needs at least one query term")
-    graft.plans.TopKBy.register(spark)
     val postings = spark.read.parquet(s"$indexDir/postings")
       .where(col("tp").isin(terms.map(_.take(1)).distinct: _*) &&
         col("term").isin(terms: _*))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -296,16 +295,5 @@ object ArrayCombos {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** Register graft_pairs / graft_triples. Idempotent. Sessions built
-    * through [[graft.GraftExtensions]] get the functions at session
-    * build; this call covers sessions that cannot pass extensions
-    * (the per-query register discipline every graft function uses). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pairs", exprs => ArrayPairs(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_triples", exprs => ArrayTriples(exprs.head), "built-in")
   }
 }

@@ -51,9 +51,8 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]. Injected via
-  * SparkSessionExtensions (production) or experimental.extraStrategies
-  * (extension-less sessions). */
+/** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]. Injected by
+  * [[graft.GraftExtensions]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt) =>

@@ -51,8 +51,8 @@ case class BandJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[BandJoinPlan]] as [[BandJoinExec]]. Injected via
-  * SparkSessionExtensions (production) or experimental.extraStrategies. */
+/** Plans [[BandJoinPlan]] as [[BandJoinExec]]. Injected by
+  * [[graft.GraftExtensions]]. */
 object BandJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case BandJoinPlan(l, r, lk, rk, t, lo, hi) =>

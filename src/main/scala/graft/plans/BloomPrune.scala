@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain,
   Expression, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -22,20 +21,10 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 object BloomPrune {
 
   def aggExpr(exprs: Seq[Expression]): Expression = {
-    require(exprs.size == 3, "graft_bloom_agg(key, numItems, numBits)")
     new BloomFilterAggregate(XxHash64(Seq(exprs.head), 42L), exprs(1), exprs(2))
   }
 
   def containsExpr(exprs: Seq[Expression]): Expression = {
-    require(exprs.size == 2, "graft_bloom_contains(sketch, key)")
     BloomFilterMightContain(exprs.head, XxHash64(Seq(exprs(1)), 42L))
-  }
-
-  /** Register both functions for expr()/spark.sql use. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", aggExpr, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", containsExpr, "built-in")
   }
 }

@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Count-Min sketch (Cormode & Muthukrishnan, "An improved data stream
@@ -78,7 +77,6 @@ object CountMinSketch {
 
   /** graft_cms(expr, depth, width) builder. */
   def aggFromExprs(exprs: Seq[Expression]): CountMinSketchAgg = {
-    require(exprs.size == 3, "graft_cms(expr, depth, width)")
     val depth = intLit(exprs(1), "graft_cms: depth")
     val width = intLit(exprs(2), "graft_cms: width")
     require(depth >= 1 && depth <= 32 && width >= 1,
@@ -88,18 +86,9 @@ object CountMinSketch {
 
   /** graft_cms_estimate(sketch, key, depth, width) builder. */
   def estFromExprs(exprs: Seq[Expression]): CmsEstimate = {
-    require(exprs.size == 4, "graft_cms_estimate(sketch, key, depth, width)")
     CmsEstimate(exprs(0), exprs(1),
       intLit(exprs(2), "graft_cms_estimate: depth"),
       intLit(exprs(3), "graft_cms_estimate: width"))
-  }
-
-  /** Register both functions for expr()/spark.sql use. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms", aggFromExprs, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_estimate", estFromExprs, "built-in")
   }
 }
 

@@ -2462,9 +2462,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
 
     case TopKRe(table, key, score, id, k) =>
       import org.apache.spark.sql.functions.{col, expr, posexplode, round}
-      val s = spark()
-      graft.plans.TopKBy.register(s)
-      s.table(table)
+      spark().table(table)
         .groupBy(col(key))
         .agg(expr(
           s"graft_topk_by(CAST($score AS DOUBLE), $id, $id, $k)")

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -98,14 +97,5 @@ object JaroWinkler {
       sim = sim + prefix * 0.1 * (1.0 - sim)
     }
     sim
-  }
-}
-
-object LinkExpressions {
-  /** Register for use via expr()/spark.sql. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler",
-      exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
   }
 }

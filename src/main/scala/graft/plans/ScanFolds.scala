@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -336,28 +335,15 @@ object ScanFolds {
   private def litI(e: Expression): Int =
     e.eval().asInstanceOf[Number].intValue()
 
-  /** Register the scan-fold expressions for expr()/spark.sql use.
-    * Idempotent; call once per session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ewma_chart",
-      exprs => EwmaChartScan(
-        exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kalman_scan",
-      exprs => KalmanScan(exprs(0), litD(exprs(1)), litD(exprs(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_holt_scan",
-      exprs => HoltScan(exprs(0), litD(exprs(1)), litD(exprs(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ewma_smooth_scan",
-      exprs => EwmaSmoothScan(exprs(0), litD(exprs(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hw_scan",
-      exprs => HoltWintersScan(exprs(0), litI(exprs(1)),
-        litD(exprs(2)), litD(exprs(3)), litD(exprs(4))), "built-in")
-  }
+  /** SQL builders (see [[graft.GraftExtensions]]) for the folds whose
+    * tuning arguments are constants. */
+  def kalman(exprs: Seq[Expression]): Expression =
+    KalmanScan(exprs(0), litD(exprs(1)), litD(exprs(2)))
+  def holt(exprs: Seq[Expression]): Expression =
+    HoltScan(exprs(0), litD(exprs(1)), litD(exprs(2)))
+  def ewmaSmooth(exprs: Seq[Expression]): Expression =
+    EwmaSmoothScan(exprs(0), litD(exprs(1)))
+  def holtWinters(exprs: Seq[Expression]): Expression =
+    HoltWintersScan(exprs(0), litI(exprs(1)),
+      litD(exprs(2)), litD(exprs(3)), litD(exprs(4)))
 }

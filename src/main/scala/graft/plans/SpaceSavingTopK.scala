@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
   LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SpaceSaving summary: capacity-bounded (term -> (count, err)) map.
@@ -142,17 +141,10 @@ object SpaceSavingTopK {
 
   /** graft_topk(expr, k[, capacity]) builder. */
   def fromExprs(exprs: Seq[Expression]): SpaceSavingTopK = {
-    require(exprs.size == 2 || exprs.size == 3,
-      "graft_topk(expr, k[, capacity])")
     val k = lit(exprs(1), "k")
     val cap =
       if (exprs.size == 3) lit(exprs(2), "capacity") else math.max(1024, 8 * k)
     require(k >= 1 && cap >= k, s"graft_topk: need 1 <= k <= capacity")
     SpaceSavingTopK(exprs.head, k, cap)
   }
-
-  /** Register graft_topk for expr()/spark.sql use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", fromExprs, "built-in")
 }

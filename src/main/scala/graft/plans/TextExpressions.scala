@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expressions for the text hot paths. Same results as
   * the composed-builtin versions (and the DuckDB oracle), minus the
@@ -342,29 +341,15 @@ object Simhash64 {
 }
 
 object TextExpressions {
-  /** Register the text expressions for use via expr()/spark.sql.
-    * Idempotent; call once per session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fingerprint",
-      exprs => FingerprintHash(exprs.head, 256), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => MinhashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_hashes",
-      exprs => ShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64",
-      exprs => Simhash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_window_hashes",
-      exprs => WindowHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-  }
+  private def litI(e: Expression): Int =
+    e.eval().asInstanceOf[Number].intValue()
+
+  /** SQL builders (see [[graft.GraftExtensions]]) for the expressions
+    * whose size argument is a constant. */
+  def minhash(exprs: Seq[Expression]): Expression =
+    MinhashSignature(exprs(0), litI(exprs(1)))
+  def shingleHashes(exprs: Seq[Expression]): Expression =
+    ShingleHashes(exprs(0), litI(exprs(1)))
+  def windowHashes(exprs: Seq[Expression]): Expression =
+    WindowHashes(exprs(0), litI(exprs(1)))
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
   Expression, Literal, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType,
   IntegerType}
 
@@ -173,33 +172,9 @@ object ThetaSketch {
   def empty: Array[Byte] = serialize(new ThetaBuffer(16))
 
   def aggFromExprs(exprs: Seq[Expression]): ThetaSketchAgg = {
-    require(exprs.size == 1 || exprs.size == 2,
-      "graft_theta(expr[, k])")
     val k = if (exprs.size == 2) intLit(exprs(1), "k") else 4096
     require(k >= 16, "graft_theta: need k >= 16")
     ThetaSketchAgg(exprs.head, k)
-  }
-
-  /** Register the sketch aggregate + estimators for expr()/SQL use.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("graft_theta", aggFromExprs, "built-in")
-    r.createOrReplaceTempFunction("graft_theta_estimate",
-      es => { require(es.size == 1, "graft_theta_estimate(sketch)")
-        ThetaEstimate(es.head) }, "built-in")
-    r.createOrReplaceTempFunction("graft_theta_merge",
-      es => { require(es.size == 1, "graft_theta_merge(sketch)")
-        ThetaMergeAgg(es.head) }, "built-in")
-    r.createOrReplaceTempFunction("graft_theta_union",
-      es => { require(es.size == 2, "graft_theta_union(a, b)")
-        ThetaUnion(es.head, es(1)) }, "built-in")
-    r.createOrReplaceTempFunction("graft_theta_intersect",
-      es => { require(es.size == 2, "graft_theta_intersect(a, b)")
-        ThetaIntersect(es.head, es(1)) }, "built-in")
-    r.createOrReplaceTempFunction("graft_theta_anotb",
-      es => { require(es.size == 2, "graft_theta_anotb(a, b)")
-        ThetaANotB(es.head, es(1)) }, "built-in")
   }
 }
 

@@ -3,7 +3,6 @@ package graft.plans
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
   DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression,
   GenericInternalRow, Literal, UnsafeProjection, UnsafeRow}
@@ -159,7 +158,6 @@ object TopKBy {
   /** graft_topk_by(score, tie, payload, k) builder; score/tie are
     * cast to double/bigint, k must be an integer literal. */
   def fromExprs(exprs: Seq[Expression]): TopKBy = {
-    require(exprs.size == 4, "graft_topk_by(score, tie, payload, k)")
     val k = exprs(3) match {
       case Literal(v: Int, IntegerType) => v
       case e => throw new IllegalArgumentException(
@@ -172,9 +170,4 @@ object TopKBy {
       else Cast(exprs(1), LongType)
     TopKBy(s, t, exprs(2), k)
   }
-
-  /** Register graft_topk_by for expr()/spark.sql use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk_by", fromExprs, "built-in")
 }

@@ -224,7 +224,6 @@ object Advanced {
     // pipeline splits (train/held-out) at any scale.
     "q79_hash_sample" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       t.documents
         .withColumn("fp", expr("graft_fingerprint(text)"))
         .withColumn("bucket", pmod(col("fp"), lit(20L)))
@@ -256,7 +255,6 @@ object Advanced {
     // tiny and broadcast, the training side streams.
     "q82_contamination" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       val sh = t.documents.select(
         col("doc_id"),
         explode(expr("graft_shingle_hashes(text, 3)")).as("h"))
@@ -284,7 +282,6 @@ object Advanced {
     // engine-portable, reproducible at any scale (train/eval splits).
     "q83_stratified_sample" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       val w = Window.partitionBy(col("lang"))
         .orderBy(col("fp"), col("doc_id"))
       t.documents
@@ -476,7 +473,6 @@ object Advanced {
     // evicts (~1.6k-16k distinct keys per segment) and lands inside
     // the analytic error bounds.
     "q368_theta_setops" -> { (spark, dir) =>
-      graft.plans.ThetaSketch.register(spark)
       val t = Tables(spark, dir)
       // scoped: the distinct daily-audience frame feeds BOTH the
       // sketch aggregate and the exact pairwise intersections

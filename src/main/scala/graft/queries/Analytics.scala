@@ -72,7 +72,6 @@ object Analytics {
     // output is a |k|-row summary.
     "q224_semdedup" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.VectorExpressions.register(spark)
       // scoped cache: read as both pair sides + the summary base
       val asg = graft.operators.CacheScope.scoped(
         MLOps.kmeans(t.embeddings, k = 8, iters = 3)
@@ -105,7 +104,6 @@ object Analytics {
     // on k-row frames.
     "q290_davies_bouldin" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.VectorExpressions.register(spark)
       val model = graft.operators.CacheScope.scoped(
         MLOps.kmeansModel(t.embeddings, k = 8, iters = 3))
       val s = MLOps.assign(t.embeddings, model)

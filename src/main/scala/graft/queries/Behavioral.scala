@@ -481,7 +481,6 @@ object Behavioral {
     // shuffle on dst; the node list and count stay broadcast.
     "q163_pagerank" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
       val pairs = graft.operators.DedupOps
         .materializedCosinePairs(spark, dir, 4, 0.3)
         .select(col("vec_a").as("src"), col("vec_b").as("dst"))
@@ -526,7 +525,6 @@ object Behavioral {
     // state stays (node, score) pairs.
     "q324_hits" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
       val pairs = graft.operators.DedupOps
         .materializedCosinePairs(spark, dir, 4, 0.3)
         .select(col("vec_a").as("src"), col("vec_b").as("dst"))
@@ -587,7 +585,6 @@ object Behavioral {
     // per-node adjacency materialization, O(rounds) fixed passes.
     "q245_communities" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
       val pairs = graft.operators.DedupOps
         .materializedCosinePairs(spark, dir, 4, 0.3)
         .select(col("vec_a").as("src"), col("vec_b").as("dst"))
@@ -633,7 +630,6 @@ object Behavioral {
     // semi-join pair + one aggregate over the bounded LSH edge list.
     "q338_kcore" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
       val pairs = graft.operators.DedupOps
         .materializedCosinePairs(spark, dir, 4, 0.3)
         .select(col("vec_a").as("src"), col("vec_b").as("dst"))
@@ -678,7 +674,6 @@ object Behavioral {
     // division.
     "q349_dedup_thresholds" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
       val pairs = graft.operators.CacheScope.scoped(
         graft.operators.DedupOps.materializedCosinePairs(spark, dir, 4, 0.3)
           .select(col("vec_a"), col("vec_b"), col("cos")))
@@ -709,7 +704,6 @@ object Behavioral {
     // bounded edge list), one final division + sqrt.
     "q339_assortativity" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
       val pairs = graft.operators.DedupOps
         .materializedCosinePairs(spark, dir, 4, 0.3)
         .select(col("vec_a").as("src"), col("vec_b").as("dst"))
@@ -742,7 +736,6 @@ object Behavioral {
     // the grand Q folds in LABEL ORDER == the oracle's list_reduce.
     "q340_modularity" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
       val pairs = graft.operators.CacheScope.scoped(
         graft.operators.DedupOps.materializedCosinePairs(spark, dir, 4, 0.3)
           .select(col("vec_a").as("src"), col("vec_b").as("dst")))
@@ -821,7 +814,6 @@ object Behavioral {
     // semi-joins, and nothing materializes per-node adjacency.
     "q251_dbscan" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
       val pairs = graft.operators.DedupOps
         .materializedCosinePairs(spark, dir, 4, 0.3)
         .select(col("vec_a"), col("vec_b"))
@@ -927,7 +919,6 @@ object Behavioral {
     // pipeline actually ships: graph -> policy -> survivors.
     "q166_survivorship" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
       val pairs = graft.operators.DedupOps
         .materializedCosinePairs(spark, dir, 4, 0.3)
         .select(col("vec_a"), col("vec_b"))
@@ -984,7 +975,6 @@ object Behavioral {
     // tolerance); the k=512 sketch genuinely evicts at sf0.1 and
     // stays inside the analytic bound.
     "q370_theta_rolling" -> { (spark, dir) =>
-      graft.plans.ThetaSketch.register(spark)
       // scoped: the (day, user) projection feeds both the daily
       // sketches and the exact rolling-distinct side
       val ev = graft.operators.CacheScope.scoped(
@@ -1249,8 +1239,6 @@ object Behavioral {
     // Bayes q126, kNN here).
     "q179_knn_classify" -> { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      graft.plans.VectorExpressions.register(spark)
-      graft.plans.TopKBy.register(spark)
       val cents = e.where(col("vec_id") < 16)
         .select(col("vec_id").cast("int").as("c_id"),
           transform(col("embedding"), v => v.cast("double")).as("centroid"))

@@ -246,7 +246,6 @@ object Coverage {
     // this vocabulary, so counts are exact and the oracle applies.
     "q112_heavy_hitters" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.SpaceSavingTopK.register(spark)
       t.documents
         .select(col("lang"), explode(TF.regexTokens(col("text"))).as("term"))
         .groupBy(col("lang"))
@@ -486,7 +485,6 @@ object Coverage {
     // not rows-only; exact_n sits alongside for the quality contract.
     "q117_cms_sketch" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.CountMinSketch.register(spark)
       val sk = t.events.agg(expr("graft_cms(event_type, 4, 64)").as("sk"))
       t.events.groupBy(col("event_type")).agg(count(lit(1)).as("exact_n"))
         .crossJoin(broadcast(sk))

@@ -309,7 +309,6 @@ object Curation {
     // is a TakeOrdered — no full sort at scale.
     "q138_weighted_sample" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       t.documents
         .withColumn("u",
           (expr("graft_fingerprint(text)") + lit(1L)).cast("double") /

@@ -214,7 +214,6 @@ object Mining {
     // bucket-capped upstream so the joins stay bounded).
     "q208_triangles" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.VectorExpressions.register(spark)
       val e = graft.operators.CacheScope.scoped(
         DedupOps.materializedCosinePairs(spark, dir, 4, 0.3)
           .select(col("vec_a").as("u"), col("vec_b").as("v")))
@@ -437,7 +436,6 @@ object Mining {
     // per-basket candidate ranking is another bounded funnel — no
     // partition-less window, nothing quadratic in the catalog.
     "q371_rec_eval" -> { (spark, dir) =>
-      graft.plans.TopKBy.register(spark)
       val t = Tables(spark, dir)
       // scoped: the distinct basket frame is read by the holdout
       // derivation AND the train split

@@ -51,7 +51,6 @@ object Pipeline {
     // sorts the corpus.
     "q237_training_order" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       val d = t.documents.select(col("doc_id"),
           expr("graft_fingerprint(CAST(doc_id AS STRING))").as("fp"))
         .withColumn("shard", pmod(col("fp"), lit(8L)))
@@ -143,7 +142,6 @@ object Pipeline {
       // intersection pairs never materialize here, and the oracle
       // filters them out the same way (WHERE intersect > 0), so the
       // two sides agree at any scale.
-      graft.plans.TextExpressions.register(spark)
       val d = graft.operators.CacheScope.scoped(t.documents.select(
         col("doc_id"),
         expr("n_chars div 10").as("blk"),
@@ -190,7 +188,6 @@ object Pipeline {
     // block size — never the quadratic all-pairs within a label.
     "q52_embed_dedup" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.VectorExpressions.register(spark)
       DedupOps.materializedCosinePairs(spark, dir, 4, 0.3)
         .select(col("label"), col("vec_a"), col("vec_b"),
           round(col("cos"), 6).as("cos"))
@@ -207,7 +204,6 @@ object Pipeline {
     // reference for adversarial graphs).
     "q99_dedup_clusters" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.VectorExpressions.register(spark)
       val pairs = DedupOps.materializedCosinePairs(spark, dir, 4, 0.3)
         .select(col("vec_a"), col("vec_b"))
       val comp = DedupOps.connectedComponents(pairs, "vec_a", "vec_b")
@@ -224,7 +220,6 @@ object Pipeline {
       val t = Tables(spark, dir)
       val q = t.embeddings.where(col("vec_id") === 0)
         .select(col("embedding").as("qe"))
-      graft.plans.VectorExpressions.register(spark)
       t.embeddings.where(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .withColumn("cos", expr("graft_cosine(embedding, qe)"))
@@ -253,8 +248,6 @@ object Pipeline {
           col("qb"), col("qb").bitwiseXOR(1), col("qb").bitwiseXOR(2),
           col("qb").bitwiseXOR(4), col("qb").bitwiseXOR(8)))
           .as("bucket"))
-      graft.plans.VectorExpressions.register(spark)
-      graft.plans.TopKBy.register(spark)
       bucketed.join(queries, Seq("bucket"))
         .where(col("vec_id") =!= col("q_id"))
         .withColumn("cos", expr("graft_cosine(embedding, qe)"))
@@ -275,8 +268,6 @@ object Pipeline {
     // path; the broadcast query set keeps the corpus scan single-pass.
     "q196_bruteforce_topk" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.VectorExpressions.register(spark)
-      graft.plans.TopKBy.register(spark)
       val queries = t.embeddings.where(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
       t.embeddings.crossJoin(broadcast(queries))
@@ -309,7 +300,6 @@ object Pipeline {
     // metadata-cheap planning scalar, not a data pass.
     "q101_ann_ivf" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.VectorExpressions.register(spark)
       val e = t.embeddings
       val nlist = math.ceil(math.sqrt(e.count().toDouble)).toInt
       val nprobe = math.max(2, math.ceil(nlist / 4.0).toInt)
@@ -323,7 +313,6 @@ object Pipeline {
           struct(col("d2"), col("c_id"))).as("_b"))
         .select(col("_b.c_id").as("c_id"), col("vec_id"),
           col("_b.embedding").as("embedding"))
-      graft.plans.TopKBy.register(spark)
       // nprobe nearest lists per query: bounded top-k aggregate on
       // -d2 (asc distance), not a window — no per-query sort task.
       val qranked = e.where(col("vec_id") < 10)
@@ -440,7 +429,6 @@ object Pipeline {
     // — engine-portable, oracle-checked).
     "q59_fingerprint" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       t.documents.select(
         col("doc_id"),
         expr("graft_fingerprint(text)").as("fp"))
@@ -653,7 +641,6 @@ object Pipeline {
     // weight is float-order independent.
     "q225_dsir_weights" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       // scoped cache: scanned twice (bucket counts + scoring fold)
       val docs = graft.operators.CacheScope.scoped(t.documents
         .select(col("doc_id"), col("lang"), col("source"),
@@ -703,7 +690,6 @@ object Pipeline {
     // oracle's list_reduce.
     "q319_js_divergence" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       val tok = t.documents
         .select(col("source"),
           explode(TF.regexTokens(col("text"))).as("tk"))
@@ -778,8 +764,6 @@ object Pipeline {
     // paths — the fusion shape is unchanged.
     "q220_hybrid_rrf" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.VectorExpressions.register(spark)
-      graft.plans.TopKBy.register(spark)
       val docs = t.documents
         .select(col("doc_id"), TF.tokenSet(col("text")).as("tk"))
       val q0 = docs.where(col("doc_id") === 0).select(col("tk").as("qtk"))

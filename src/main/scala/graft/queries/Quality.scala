@@ -87,7 +87,6 @@ object Quality {
     // hash per-row); the shuffles carry (hash) and (doc_id) scalars.
     "q232_window_dedup" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       val wins = t.documents
         .select(col("doc_id"),
           expr("transform(filter(split(lower(text), '[^a-z0-9]+'), " +
@@ -129,7 +128,6 @@ object Quality {
     // sort is total).
     "q294_bootstrap_ci" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       val cdf = Seq(0.36787944117144233, 0.7357588823428847,
         0.9196986029286058, 0.9810118431238462, 0.9963401531726563,
         0.9994058151824183, 0.9999167588507119)
@@ -166,7 +164,6 @@ object Quality {
 
     "q188_hash_split" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       t.documents
         .withColumn("bucket",
           pmod(expr("graft_fingerprint(CAST(doc_id AS STRING))"),
@@ -187,7 +184,6 @@ object Quality {
     // exact-decimal mean length.
     "q189_stratified_sample" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
       t.documents
         .where(pmod(expr("graft_fingerprint(CAST(doc_id AS STRING))"),
           lit(5L)) === 0)
@@ -207,8 +203,6 @@ object Quality {
     // over the corpus.
     "q203_group_sample" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.TextExpressions.register(spark)
-      graft.plans.TopKBy.register(spark)
       t.documents
         .select(col("source"), col("doc_id"),
           expr("graft_fingerprint(CAST(doc_id AS STRING))").as("fp"))

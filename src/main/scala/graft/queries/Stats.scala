@@ -677,7 +677,6 @@ object Stats {
     // order. Output: per-fold held-out accuracy.
     "q266_cv_centroid" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.VectorExpressions.register(spark)
       val e = t.embeddings.select(col("vec_id"), col("label"),
         transform(col("embedding"), v => v.cast("double")).as("x"),
         pmod(expr("graft_fingerprint(CAST(vec_id AS STRING))"),
@@ -973,7 +972,6 @@ object Stats {
     // sides.
     "q303_kalman" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.ScanFolds.register(spark)
       val daily = t.orders
         .groupBy(to_date(col("o_orderdate")).as("d"))
         .agg(count(lit(1)).cast("double").as("x"))
@@ -1408,7 +1406,6 @@ object Stats {
     // verdict is a pure function of the hash-checked columns.
     "q320_ewma_chart" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      graft.plans.ScanFolds.register(spark)
       val daily = t.orders
         .groupBy(to_date(col("o_orderdate")).as("d"))
         .agg(count(lit(1)).as("x"))

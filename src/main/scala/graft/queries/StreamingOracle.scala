@@ -509,8 +509,6 @@ object StreamingOracle {
     // per corpus fingerprint under the CacheFs root; re-runs read
     // the published results.
     "q406_stream_ann_final" -> { (spark, dir) =>
-      graft.plans.VectorExpressions.register(spark)
-      graft.plans.TopKBy.register(spark)
       val t = Tables(spark, dir)
       val e = t.embeddings
       val fp = graft.sources.CacheFs.fingerprint(

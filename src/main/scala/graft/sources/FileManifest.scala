@@ -130,7 +130,6 @@ object FileManifest {
       : String = synchronized {
     val dir = new Path(layoutDir, s"_bloom_$keyCol")
     if (!fs(spark, dir).exists(new Path(dir, "_SUCCESS"))) {
-      graft.plans.BloomPrune.register(spark)
       spark.read.parquet(layoutDir)
         .groupBy(input_file_name().as("file"))
         .agg(expr(s"graft_bloom_agg($keyCol, ${numItems}L, ${numBits}L)")
@@ -154,7 +153,6 @@ object FileManifest {
     val mDir = buildBloom(spark, layoutDir, keyCol, numItems, numBits)
     val fresh = unknownFiles(spark, mDir, layoutDir)
     if (fresh.nonEmpty) {
-      graft.plans.BloomPrune.register(spark)
       spark.read.parquet(fresh: _*)
         .groupBy(input_file_name().as("file"))
         .agg(expr(s"graft_bloom_agg($keyCol, ${numItems}L, ${numBits}L)")

@@ -27,7 +27,6 @@ object EventStreams {
     * (footer-only, no data scan) and normalize `ts` to TIMESTAMP the
     * same way the batch catalog does. */
   def readEvents(spark: SparkSession, eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val probed: StructType = spark.read.parquet(eventsDir).schema
     graft.Tables.normalizeEventsTs(
       spark.readStream.schema(probed).parquet(eventsDir))

@@ -26,8 +26,6 @@ object StreamingAnn {
     * the whole ANN family uses). One pass; returns
     * (c_id, vec_id, embedding). */
   def assignLists(corpus: DataFrame, nlist: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.plans.VectorExpressions.register(spark)
     val cents = centroids(corpus, nlist)
     corpus.crossJoin(broadcast(cents))
       .withColumn("d2", expr("graft_dist_sq(centroid, embedding)"))
@@ -47,9 +45,6 @@ object StreamingAnn {
     * for every query row (vec_id, embedding) in `queries`. */
   def probe(queries: DataFrame, lists: DataFrame, cents: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    graft.plans.VectorExpressions.register(spark)
-    graft.plans.TopKBy.register(spark)
     val qranked = queries
       .crossJoin(broadcast(cents))
       .withColumn("d2", expr("graft_dist_sq(centroid, embedding)"))

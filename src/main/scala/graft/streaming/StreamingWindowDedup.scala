@@ -41,7 +41,6 @@ object StreamingWindowDedup {
   def windowHashes(docs: DataFrame, textCol: String): Dataset[WinOcc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.plans.TextExpressions.register(spark)
     val w = WindowTokens
     docs
       .select(col("doc_id"),

@@ -85,7 +85,6 @@ class AdvancedSpec extends AnyFunSuite {
 
   test("graft_cosine rejects non-float arrays at analysis time") {
     import spark.implicits._
-    graft.plans.VectorExpressions.register(spark)
     val df = Seq((Array(1.0, 2.0), Array(3.0, 4.0))).toDF("a", "b")
     intercept[AnalysisException] {
       df.select(expr("graft_cosine(a, b)")).collect()
@@ -154,7 +153,6 @@ class AdvancedSpec extends AnyFunSuite {
 
   test("native shingle hashes equal the composed fingerprint version") {
     import spark.implicits._
-    graft.plans.TextExpressions.register(spark)
     for (k <- Seq(2, 3)) {
       val docs = Tables(spark, sfDir).documents
         .select(col("doc_id"), col("text"))

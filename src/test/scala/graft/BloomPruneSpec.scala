@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ExtendedOps
-import graft.plans.BloomPrune
 
 /** Bloom-pruned join: result identity with the plain join, actual
   * pruning power of the filter, and the empty-dim edge. */
@@ -28,7 +27,6 @@ class BloomPruneSpec extends AnyFunSuite {
   }
 
   test("the filter prunes the probe side before the join") {
-    BloomPrune.register(spark)
     val sk = dim.agg(call_function("graft_bloom_agg", col("dk"),
       lit(1000L), lit(1L << 16)).as("sk")).head().getAs[Array[Byte]]("sk")
     val kept = probe.where(

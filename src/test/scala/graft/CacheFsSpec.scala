@@ -104,7 +104,6 @@ class CacheFsSpec extends AnyFunSuite {
   test("materializedCosinePairs honors the conf root end to end") {
     val d = java.nio.file.Files.createTempDirectory("graft_cachefs_e2e")
     withRoot(s"file://$d") {
-      graft.plans.VectorExpressions.register(spark)
       val cached = graft.operators.DedupOps
         .materializedCosinePairs(spark, sfDir, 4, 0.3)
         .collect().map(_.toString).sorted

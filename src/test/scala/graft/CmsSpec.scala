@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.CountMinSketch
-
 /** The Count-Min sketch aggregate: one-sided error contract, exactness
   * when no buckets collide, and partition-count invariance (merge =
   * elementwise add). */
@@ -14,7 +12,6 @@ class CmsSpec extends AnyFunSuite {
 
   private def estimates(
       parts: Int, depth: Int, width: Int): Map[String, Long] = {
-    CountMinSketch.register(spark)
     val df = ((1 to 500).map(_ => "hot") ++ (1 to 40).map("k" + _))
       .toDF("term").repartition(parts)
     df.createOrReplaceTempView("cms_in")
@@ -45,7 +42,6 @@ class CmsSpec extends AnyFunSuite {
   }
 
   test("depth/width must be integer literals") {
-    CountMinSketch.register(spark)
     val df = Seq("a").toDF("term")
     intercept[Exception] {
       df.agg(expr("graft_cms(term, length(term), 8)")).collect()

@@ -16,7 +16,6 @@ class CodegenSpec extends AnyFunSuite {
   import TestSession._
 
   private def withStrictCodegen(sql: String): Array[org.apache.spark.sql.Row] = {
-    plans.TextExpressions.register(spark)
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try spark.sql(sql).collect()

@@ -50,7 +50,6 @@ class CorpusLmSpec extends AnyFunSuite {
 
   test("containment prefix filter loses nothing vs brute force") {
     // brute-force all-pairs on a 120-doc slice and compare pair sets
-    graft.plans.TextExpressions.register(spark)
     val docs = Tables(spark, sfDir).documents.limit(120)
     val d = docs.select(col("doc_id"),
       array_sort(array_distinct(

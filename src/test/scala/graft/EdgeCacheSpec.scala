@@ -13,7 +13,6 @@ class EdgeCacheSpec extends AnyFunSuite {
   import TestSession._
 
   test("materialized edges == fresh cosineCandidatePairs rows") {
-    graft.plans.VectorExpressions.register(spark)
     val fresh = DedupOps.cosineCandidatePairs(
         Tables(spark, sfDir).embeddings, 4, 0.3)
       .collect().map(_.toString).sorted
@@ -27,7 +26,6 @@ class EdgeCacheSpec extends AnyFunSuite {
   }
 
   test("different parameters get different caches") {
-    graft.plans.VectorExpressions.register(spark)
     val loose = DedupOps.materializedCosinePairs(spark, sfDir, 4, 0.1)
     val tight = DedupOps.materializedCosinePairs(spark, sfDir, 4, 0.3)
     assert(loose.count() >= tight.count())
@@ -37,7 +35,6 @@ class EdgeCacheSpec extends AnyFunSuite {
   }
 
   test("a changed corpus fingerprint rebuilds, not serves stale") {
-    graft.plans.VectorExpressions.register(spark)
     // copy the embeddings into a scratch corpus dir, materialize,
     // then REWRITE the corpus (fewer rows) — the cache must follow
     val d = java.nio.file.Files.createTempDirectory("graft_edge_fp")

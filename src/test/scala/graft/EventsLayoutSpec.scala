@@ -62,4 +62,14 @@ class EventsLayoutSpec extends AnyFunSuite {
     assert(stream.isStreaming)
     assert(stream.schema("ts").dataType == TimestampType)
   }
+
+  test("building the events readers leaves the session conf unchanged") {
+    val fresh = spark.newSession()
+    val before = fresh.conf.getAll
+    Tables(fresh, sfDir).events
+    streaming.EventStreams.readEvents(fresh, s"$sfDir/events.parquet")
+    val changed = fresh.conf.getAll.toSet.diff(before.toSet)
+    assert(changed.isEmpty && fresh.conf.getAll.size == before.size,
+      s"readers changed the session conf: $changed")
+  }
 }

@@ -92,7 +92,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("graft functions resolve through the session extension") {
-    // no per-query register() call — the extension provides them
     val n = spark.sql(
       "SELECT graft_fingerprint('hello world') AS fp").collect()
     assert(n.head.getLong(0) > 0)

@@ -89,19 +89,18 @@ class IncrementalIndexSpec extends AnyFunSuite {
     assertSameIndex(s"$base/inc", s"$base/full")
   }
 
-  test("crash mid-apply self-heals: torn batch re-applies exactly") {
+  /** Bootstrap, append, tear and replay an index under `base`; `inc`
+    * is how the index dir under `base` is named to the operator (a
+    * plain path, or a qualified URI of the same directory). */
+  private def crashSelfHeals(base: String, inc: String): Unit = {
     val docs = Tables(spark, sfDir).documents
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_idxcrash").toString
     val half1 = docs.where(col("doc_id") % 2 === 0)
     val half2 = docs.where(col("doc_id") % 2 === 1)
     TextSearchOps.buildIndex(docs, "doc_id", "text", s"$base/full")
 
     // bootstrap batch 0, then append batch 7
-    TextSearchOps.applyBatchIdempotent(
-      half1, "doc_id", "text", s"$base/inc", "0")
-    TextSearchOps.applyBatchIdempotent(
-      half2, "doc_id", "text", s"$base/inc", "7")
+    TextSearchOps.applyBatchIdempotent(half1, "doc_id", "text", inc, "0")
+    TextSearchOps.applyBatchIdempotent(half2, "doc_id", "text", inc, "7")
     assertSameIndex(s"$base/inc", s"$base/full")
 
     // simulate a crash BETWEEN the batch-7 file moves and its marker:
@@ -115,22 +114,19 @@ class IncrementalIndexSpec extends AnyFunSuite {
     torn.head.delete()
 
     // at-least-once replay of batch 7 must restore the exact state
-    TextSearchOps.applyBatchIdempotent(
-      half2, "doc_id", "text", s"$base/inc", "7")
+    TextSearchOps.applyBatchIdempotent(half2, "doc_id", "text", inc, "7")
     assertSameIndex(s"$base/inc", s"$base/full")
 
     // and a replay of the fully applied batch is a no-op
     val names = new java.io.File(root, "doclen")
       .listFiles().map(_.getName).sorted.toSeq
-    TextSearchOps.applyBatchIdempotent(
-      half2, "doc_id", "text", s"$base/inc", "7")
+    TextSearchOps.applyBatchIdempotent(half2, "doc_id", "text", inc, "7")
     assert(new java.io.File(root, "doclen")
       .listFiles().map(_.getName).sorted.toSeq == names)
 
     // a committed bootstrap's replay is short-circuited by its marker
     assert(new java.io.File(root, "_applied_0").exists())
-    TextSearchOps.applyBatchIdempotent(
-      half1, "doc_id", "text", s"$base/inc", "0")
+    TextSearchOps.applyBatchIdempotent(half1, "doc_id", "text", inc, "0")
     assertSameIndex(s"$base/inc", s"$base/full")
 
     // bootstrap replay WITHOUT its marker (crash before it): the
@@ -138,12 +134,25 @@ class IncrementalIndexSpec extends AnyFunSuite {
     // the stale markers of wiped appends, so re-delivering batch 7
     // restores exactness instead of being suppressed
     new java.io.File(root, "_applied_0").delete()
-    TextSearchOps.applyBatchIdempotent(
-      half1, "doc_id", "text", s"$base/inc", "0")
+    TextSearchOps.applyBatchIdempotent(half1, "doc_id", "text", inc, "0")
     assert(!new java.io.File(root, "_applied_7").exists(),
       "stale append marker survived the bootstrap rebuild")
-    TextSearchOps.applyBatchIdempotent(
-      half2, "doc_id", "text", s"$base/inc", "7")
+    TextSearchOps.applyBatchIdempotent(half2, "doc_id", "text", inc, "7")
     assertSameIndex(s"$base/inc", s"$base/full")
+  }
+
+  test("crash mid-apply self-heals: torn batch re-applies exactly") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_idxcrash").toString
+    crashSelfHeals(base, s"$base/inc")
+  }
+
+  test("a qualified file: index dir is maintained in place") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_idxuri").toString
+    crashSelfHeals(base, s"file:$base/inc")
+    // nothing lands in a relative `file:` tree under the working dir
+    assert(!new java.io.File(s"file:$base").exists(),
+      "index markers written under the JVM's working directory")
   }
 }

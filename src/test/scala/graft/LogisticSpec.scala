@@ -60,4 +60,13 @@ class LogisticSpec extends AnyFunSuite {
     assert(w.sameElements(w2) && b == b2,
       "training result depends on partitioning")
   }
+
+  test("an empty training frame fails with a clear message") {
+    import spark.implicits._
+    val empty = Seq.empty[(Seq[Double], Int)].toDF("feat", "y")
+    val e = intercept[IllegalArgumentException] {
+      MLOps.logisticTrain(empty, "feat", "y", 3, 1.0)
+    }
+    assert(e.getMessage.contains("training frame is empty"))
+  }
 }

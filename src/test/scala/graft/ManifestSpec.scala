@@ -159,7 +159,6 @@ class ManifestSpec extends AnyFunSuite {
       == before + indexed)
     // per-file sketches depend on that file alone: the refreshed
     // manifest must equal a from-scratch rebuild byte for byte
-    graft.plans.BloomPrune.register(spark)
     val full = spark.read.parquet(tmp)
       .groupBy(input_file_name().as("file"))
       .agg(expr("graft_bloom_agg(l_orderkey, 65536L, 524288L)")

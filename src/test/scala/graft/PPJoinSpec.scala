@@ -14,7 +14,6 @@ class PPJoinSpec extends AnyFunSuite {
   import TestSession._
 
   private def bruteForce(t: Double): Set[(Long, Long, Double)] = {
-    graft.plans.TextExpressions.register(spark)
     val d = Tables(spark, sfDir).documents
       .select(col("doc_id"),
         array_distinct(expr("graft_shingle_hashes(text, 2)")).as("bg"))

@@ -29,7 +29,6 @@ class PqSpec extends AnyFunSuite {
     assert(bad.count() == 0)
     // recon of a codebook vector is itself: its nearest codeword in
     // every subspace is its own sub-slice (distance 0)
-    graft.plans.VectorExpressions.register(spark)
     val self = coded.join(
         emb.select(col("vec_id"),
           transform(col("embedding"), v => v.cast("double")).as("ev")),
@@ -49,8 +48,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("ADC search recovers most exact top-5 neighbors (recall@5)") {
-    graft.plans.VectorExpressions.register(spark)
-    graft.plans.TopKBy.register(spark)
     val got = PqOps.search(emb, m = 4, ks = 16, dim = 64,
       nQueries = 10, nCandidates = 20, k = 5)
       .select("q_id", "vec_id").collect()

@@ -50,4 +50,17 @@ class QuantileOpsSpec extends AnyFunSuite {
     assert(out.map(_.getString(0)).toSeq == Seq("a"))
     assert(out.head.getDouble(1) == 1.0) // 100.0 never leaked into a
   }
+
+  test("a percentile outside (0, 1] is rejected, not a NULL pick") {
+    val df = Seq(("a", 1.0), ("a", 2.0)).toDF("g", "v")
+    for (p <- Seq(0.0, -0.5, 1.5, Double.NaN)) {
+      val e = intercept[IllegalArgumentException] {
+        QuantileOps.percentileDisc(df, "g", "v", Seq("bad" -> p))
+      }
+      assert(e.getMessage.contains("outside (0, 1]"), s"p = $p")
+    }
+    val top = QuantileOps.percentileDisc(df, "g", "v", Seq("max" -> 1.0))
+      .collect()
+    assert(top.head.getDouble(1) == 2.0)
+  }
 }

@@ -10,7 +10,6 @@ class R11OptimSpec extends AnyFunSuite {
   import TestSession._
 
   test("graft_pairs == nested transform/flatten lambda formulation") {
-    graft.plans.ArrayCombos.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val rows = Seq.tabulate(60) { i =>
@@ -33,7 +32,6 @@ class R11OptimSpec extends AnyFunSuite {
   }
 
   test("graft_triples == nested transform/flatten lambda formulation") {
-    graft.plans.ArrayCombos.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(13)
     val rows = Seq.tabulate(40) { i =>
@@ -56,7 +54,6 @@ class R11OptimSpec extends AnyFunSuite {
   }
 
   test("graft_pairs generalizes over element types (strings)") {
-    graft.plans.ArrayCombos.register(spark)
     import spark.implicits._
     val df = Seq((1L, Seq("a", "b", "c"))).toDF("id", "items")
     val got = df.select(explode(expr("graft_pairs(items)")).as("e"))

@@ -14,7 +14,6 @@ class ScanFoldSpec extends AnyFunSuite {
   import TestSession._
 
   test("q320: native graft_ewma_chart == the SQL aggregate fold, bitwise") {
-    graft.plans.ScanFolds.register(spark)
     val t = Tables(spark, sfDir)
     val daily = t.orders
       .groupBy(to_date(col("o_orderdate")).as("d"))
@@ -68,7 +67,6 @@ class ScanFoldSpec extends AnyFunSuite {
   }
 
   test("single-day series: hw is NULL like the SQL fold's null sigma") {
-    graft.plans.ScanFolds.register(spark)
     import spark.implicits._
     val one = Seq((java.sql.Date.valueOf("2024-01-01"), 5L))
       .toDF("d", "x")

@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.SpaceSavingTopK
-
 /** The SpaceSaving top-k aggregate: exact regime, approximate-regime
   * guarantees, and merge behavior across partitions. */
 class SpaceSavingSpec extends AnyFunSuite {
@@ -12,7 +10,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def topk(df: org.apache.spark.sql.DataFrame, call: String) = {
-    SpaceSavingTopK.register(spark)
     df.groupBy(col("g")).agg(expr(call).as("top"))
       .select(col("g"), explode(col("top")).as("ts"))
       .select(col("g"), col("ts.term"), col("ts.n"))

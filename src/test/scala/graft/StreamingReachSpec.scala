@@ -15,7 +15,6 @@ class StreamingReachSpec extends AnyFunSuite {
   import TestSession._
 
   test("streaming reach equals batch sketch across micro-batches") {
-    ThetaSketch.register(spark)
     val d = java.nio.file.Files.createTempDirectory("graft_reach_stream")
     val ev = Tables(spark, sfDir).events
       .select(col("event_type"), col("user_id").cast("string").as("uid"))

@@ -15,7 +15,6 @@ class ThetaSketchSpec extends AnyFunSuite {
 
   private def sketchOf(ids: Seq[String], k: Int, parts: Int)
       : Array[Byte] = {
-    ThetaSketch.register(spark)
     ids.toDF("id").repartition(parts)
       .agg(expr(s"graft_theta(id, $k)").as("sk"))
       .head().getAs[Array[Byte]](0)
@@ -89,7 +88,6 @@ class ThetaSketchSpec extends AnyFunSuite {
   test("re-aggregating stored sketches == sketching the raw union") {
     // the sketch-warehouse contract behind graft_theta_merge: persist
     // per-segment sketches once, roll up by merging the sketch column
-    ThetaSketch.register(spark)
     val rows = (for (d <- 1 to 7; u <- 0 until 3000) yield (d, s"u$u"))
     val daily = rows.toDF("day", "id").repartition(8)
       .groupBy($"day").agg(expr("graft_theta(id, 512)").as("sk"))
@@ -102,7 +100,6 @@ class ThetaSketchSpec extends AnyFunSuite {
   }
 
   test("null inputs are skipped; an all-null group estimates 0") {
-    ThetaSketch.register(spark)
     val sk = Seq[Option[String]](Some("a"), None, Some("b"), None)
       .toDF("id")
       .agg(expr("graft_theta(id, 64)")).head().getAs[Array[Byte]](0)
@@ -115,7 +112,6 @@ class ThetaSketchSpec extends AnyFunSuite {
   }
 
   test("k must be an integer literal >= 16") {
-    ThetaSketch.register(spark)
     val df = Seq("a").toDF("id")
     intercept[Exception] {
       df.agg(expr("graft_theta(id, length(id))")).collect()

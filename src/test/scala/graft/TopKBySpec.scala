@@ -11,13 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class TopKBySpec extends AnyFunSuite {
   import TestSession._
 
-  private def registered = {
-    graft.plans.TopKBy.register(spark)
-    spark
-  }
-
   test("equals the window top-k on random grouped data") {
-    val s = registered
+    val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(7)
     val rows = (0 until 5000).map { i =>
@@ -39,7 +34,7 @@ class TopKBySpec extends AnyFunSuite {
   }
 
   test("groups smaller than k return all members, best first") {
-    val s = registered
+    val s = spark
     import s.implicits._
     val df = Seq((1, 10L, 2.0, "a"), (1, 11L, 9.0, "b"))
       .toDF("g", "id", "score", "tag")
@@ -52,7 +47,7 @@ class TopKBySpec extends AnyFunSuite {
   }
 
   test("null scores are skipped; null payloads survive") {
-    val s = registered
+    val s = spark
     import s.implicits._
     val df = Seq(
       (1, 1L, Some(5.0), Some("x")),
@@ -68,7 +63,7 @@ class TopKBySpec extends AnyFunSuite {
   }
 
   test("duplicate scores break ties by the lower id") {
-    val s = registered
+    val s = spark
     import s.implicits._
     val df = (1L to 100L).map(i => (1, i, 1.0)).toDF("g", "id", "score")
       .repartition(7)
@@ -79,7 +74,7 @@ class TopKBySpec extends AnyFunSuite {
   }
 
   test("struct payloads round-trip through the aggregate") {
-    val s = registered
+    val s = spark
     import s.implicits._
     val df = Seq((1, 1L, 3.0, "a", 10), (1, 2L, 8.0, "b", 20))
       .toDF("g", "id", "score", "s", "n")
