@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.CacheFs
+
 /** Incremental materialized aggregate view: a grouped aggregate kept
   * as a parquet artifact and maintained by MERGING mergeable partial
   * aggregates — never by re-scanning history. The view stores
@@ -36,21 +38,13 @@ object MatViewOps {
     delta.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_rows"), sum(ntok.cast("long")).as("n_tokens"))
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def hasView(spark: SparkSession, viewPath: String): Boolean = {
-    val m = new Path(viewPath, "_SUCCESS")
-    fs(spark, m).exists(m)
-  }
-
   /** Merge a delta's partials into the view at `viewPath` (creating it
     * if absent): new generation written beside the old, then swapped
     * in via rename. Integer sum re-aggregation — exact. */
   def refresh(spark: SparkSession, viewPath: String,
       deltaPartial: DataFrame, keys: Seq[String]): Unit = {
     val merged =
-      if (!hasView(spark, viewPath)) deltaPartial
+      if (!CacheFs.complete(spark, viewPath)) deltaPartial
       else spark.read.parquet(viewPath).unionByName(deltaPartial)
         .groupBy(keys.map(col): _*)
         .agg(sum(col("n_rows")).as("n_rows"),
@@ -60,7 +54,7 @@ object MatViewOps {
     // generation swap: move old out of the way, promote the new one.
     // FileSystem rename — the same commit-by-pointer move every table
     // format (Delta/Iceberg) does on an object store.
-    val filesystem = fs(spark, next)
+    val filesystem = CacheFs.fs(spark, next)
     val old = new Path(viewPath + ".old")
     filesystem.delete(old, true)
     val cur = new Path(viewPath)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -262,9 +262,8 @@ object TextSearchOps {
       // instead of being suppressed by stale markers
       names.filter(n => n.startsWith("_applied_") && n != applied)
         .foreach(n => fs.delete(new Path(root, n), false))
-    } else {
-      clearTagged(fs, root, tag)
-      val stage = new Path(root, s"_stage_$tag")
+      CacheFs.touch(spark, indexDir, applied)
+    } else CacheFs.commitBatch(spark, indexDir, tag, applied) { stage =>
       val toks = batch
         .select(col(idCol), TF.regexTokens(col(textCol)).as("toks"))
         .persist()
@@ -285,43 +284,8 @@ object TextSearchOps {
             lit(0.0)).as("sum_dl"))
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/stats")
       toks.unpersist()
-      moveFlat(fs, new Path(stage, "doclen"), new Path(root, "doclen"), tag)
-      fs.listStatus(new Path(stage, "postings"))
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-        .foreach { pd =>
-          moveFlat(fs, pd.getPath,
-            new Path(root, s"postings/${pd.getPath.getName}"), tag)
-        }
-      moveFlat(fs, new Path(stage, "stats"), new Path(root, "stats"), tag)
-      fs.delete(stage, true)
+      ()
     }
-    CacheFs.touch(spark, indexDir, applied)
-  }
-
-  /** Remove every `b<tag>_*` file a previous torn attempt left. */
-  private def clearTagged(fs: FileSystem, root: Path, tag: String): Unit = {
-    val it = fs.listFiles(root, true)
-    val torn = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.startsWith(s"b${tag}_")) torn += p
-    }
-    torn.foreach(fs.delete(_, false))
-  }
-
-  /** Move a staged directory's part files into `target` under
-    * deterministic `b<tag>_p<i>` names (i in part-name order). */
-  private def moveFlat(fs: FileSystem, stage: Path, target: Path,
-      tag: String): Unit = {
-    fs.mkdirs(target)
-    fs.listStatus(stage).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet")
-        && !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .sortBy(_.getName).zipWithIndex.foreach { case (p, i) =>
-        val dst = new Path(target, s"b${tag}_p$i.parquet")
-        if (!fs.rename(p, dst))
-          throw new java.io.IOException(s"could not move $p to $dst")
-      }
   }
 
   /** BM25 top-k against a prebuilt index: reads ONLY the query terms'

@@ -1790,9 +1790,7 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
             case Some(graft.sources.ParquetLocation(p))
                 if p.contains("/graft_tables/") =>
               graft.sources.ExternalLocations.remove(name)
-              val path = new org.apache.hadoop.fs.Path(p)
-              path.getFileSystem(s.sessionState.newHadoopConf())
-                .delete(path, true)
+              graft.sources.CacheFs.delete(s, p)
             case _ => ()
           }
           Seq(name, if (hadView) "dropped" else "absent")
@@ -2632,8 +2630,9 @@ class GraftSqlParser(spark: () => SparkSession, delegate: ParserInterface)
 
     case VacuumRe(root, keep) =>
       GraftStatementCommand.status("VACUUM",
-        Seq("root", "kept", "n_deleted", "deleted")) { _ =>
-        val deleted = graft.sources.VersionedTable.vacuum(root, keep.toInt)
+        Seq("root", "kept", "n_deleted", "deleted")) { s =>
+        val deleted =
+          graft.sources.VersionedTable.vacuum(s, root, keep.toInt)
         Seq(root, keep, deleted.length.toString, deleted.mkString(","))
       }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.StringType
 
-import graft.sources.IndexRegistry
+import graft.sources.{CacheFs, IndexRegistry}
 
 /** GRAFT CREATE INDEX <name> ON <target> (<col>) — the unified index
   * statement (reference sql/statements/SqlStatement.scala:164-175:
@@ -87,11 +87,7 @@ case class DropIndexCommand(name: String) extends LeafRunnableCommand {
       case Some(d) =>
         if (d.kind == "bloom") {
           // detail carries one manifest dir per indexed column
-          d.detail.split(",").foreach { m =>
-            val p = new org.apache.hadoop.fs.Path(m)
-            p.getFileSystem(spark.sessionState.newHadoopConf())
-              .delete(p, true)
-          }
+          d.detail.split(",").foreach(CacheFs.delete(spark, _))
         } else {
           val url = spark.conf
             .getOption(s"spark.sql.catalog.${d.detail}.url")

@@ -629,11 +629,10 @@ object Coverage {
     // the full table.
     "q462_bloom_refresh_sql" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
+      val base = new org.apache.hadoop.fs.Path(
+        graft.sources.CacheFs.root(spark),
         s"bloomref_${Integer.toHexString(dir.hashCode)}").toString
-      val marker = new java.io.File(base, "_APPENDED")
-      if (!marker.exists()) {
+      if (!graft.sources.CacheFs.complete(spark, base, "_APPENDED")) {
         t.lineitem.where(col("l_orderkey") % 2 === 0)
           .repartition(8, col("l_orderkey"))
           .write.mode("overwrite").parquet(base)
@@ -641,7 +640,7 @@ object Coverage {
         t.lineitem.where(col("l_orderkey") % 2 === 1)
           .repartition(8, col("l_orderkey"))
           .write.mode("append").parquet(base)
-        marker.createNewFile()
+        graft.sources.CacheFs.touch(spark, base, "_APPENDED")
       }
       graft.sources.FileManifest.refreshBloom(spark, base, "l_orderkey")
       graft.sources.FileManifest

@@ -18,8 +18,8 @@ import graft.Tables
 object Curation {
 
   /** Versioned-table staging root for q282/q283 (per sf dir). */
-  private def vtRoot(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
+  private def vtRoot(spark: SparkSession, sfDir: String): String =
+    new org.apache.hadoop.fs.Path(graft.sources.CacheFs.root(spark),
       s"graft_vt_${Integer.toHexString(sfDir.hashCode)}").toString
 
   /** Build the 3-version nation history ONCE per sf dir (nation is the
@@ -29,12 +29,8 @@ object Curation {
   private def vtStage(spark: SparkSession, sfDir: String, root: String,
       t: Tables): Unit = synchronized {
     import graft.sources.VersionedTable
-    if (VersionedTable.latestVersion(root) < 2) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(root))
+    if (VersionedTable.latestVersion(spark, root) < 2) {
+      graft.sources.CacheFs.delete(spark, root)
       val v0 = t.nation
       VersionedTable.commit(root, v0)
       val v1 = v0.filter(col("n_regionkey") =!= 3)
@@ -632,7 +628,7 @@ object Curation {
     "q282_time_travel" -> { (spark, dir) =>
       import graft.sources.VersionedTable
       val t = Tables(spark, dir)
-      val root = vtRoot(dir)
+      val root = vtRoot(spark, dir)
       vtStage(spark, dir, root, t)
       (0 to 2).map { v =>
         VersionedTable.read(spark, root, v)
@@ -648,7 +644,7 @@ object Curation {
     "q283_version_diff" -> { (spark, dir) =>
       import graft.sources.VersionedTable
       val t = Tables(spark, dir)
-      val root = vtRoot(dir)
+      val root = vtRoot(spark, dir)
       vtStage(spark, dir, root, t)
       VersionedTable.diff(spark, root, "n_nationkey", 0, 2)
         .groupBy(col("status"))

@@ -290,14 +290,10 @@ object Interface {
     // idempotent across Verify/Bench re-invocations.
     "q285_snapshot_sql" -> { (spark, dir) =>
       Tables(spark, dir).registerAll()
-      val root = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
+      val root = new org.apache.hadoop.fs.Path(
+        graft.sources.CacheFs.root(spark),
         s"graft_vtsql_${Integer.toHexString(dir.hashCode)}").toString
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(root))
+      graft.sources.CacheFs.delete(spark, root)
       spark.sql("SELECT * FROM nation WHERE n_regionkey <> 3")
         .createOrReplaceTempView("vt_survivors")
       spark.sql(s"GRAFT SNAPSHOT nation INTO '$root'").collect()
@@ -1259,14 +1255,11 @@ object Interface {
     // table vacuumed to KEEP 1 always deletes versions 0 and 1
     "q366_vacuum_sql" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_vacq_" +
-        graft.operators.TextSearchOps.corpusFingerprint(
-          s"$dir/region.parquet")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(root))
+      val root = new org.apache.hadoop.fs.Path(
+        graft.sources.CacheFs.root(spark),
+        "graft_vacq_" + graft.operators.TextSearchOps.corpusFingerprint(
+          s"$dir/region.parquet")).toString
+      graft.sources.CacheFs.delete(spark, root)
       graft.sources.VersionedTable.commit(root, t.region.limit(1))
       graft.sources.VersionedTable.commit(root, t.region.limit(2))
       graft.sources.VersionedTable.commit(root, t.region.limit(3))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{TextFunctions => TF}
+import graft.sources.CacheFs
 import graft.streaming.{EventStreams, StreamDedup, StreamingAnn,
   StreamingAsOf, StreamingCusum, StreamingEwma, StreamingIndexer,
   StreamingKalman, StreamingLshDedup, StreamingMarkov, StreamingMatch,
@@ -56,8 +57,7 @@ object StreamingOracle {
       .getOption("spark.graft.stream.shufflePartitions").map(_.toInt)
       .getOrElse {
         val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        val bytes = fs.getContentSummary(p).getLength
+        val bytes = CacheFs.fs(spark, p).getContentSummary(p).getLength
         val advisory = spark.sessionState.conf.getConf(
           org.apache.spark.sql.internal.SQLConf
             .ADVISORY_PARTITION_SIZE_IN_BYTES)
@@ -160,22 +160,19 @@ object StreamingOracle {
   private def stagedTable(spark: SparkSession, dir: String,
       table: String): String = {
     val src = s"$dir/$table.parquet"
-    val conf = spark.sessionState.newHadoopConf()
     val srcPath = new org.apache.hadoop.fs.Path(src)
-    if (srcPath.getFileSystem(conf).getFileStatus(srcPath).isDirectory)
-      return src
-    val fp = graft.sources.CacheFs.fingerprint(spark, src)
-    val tag = s"stream_src_${graft.sources.CacheFs.AlgoVersion}_" +
-      s"${table}_$fp"
-    graft.sources.CacheFs.getOrBuild(spark, tag) { stage =>
-      val from = srcPath
+    val fsFrom = CacheFs.fs(spark, srcPath)
+    if (fsFrom.getFileStatus(srcPath).isDirectory) return src
+    val fp = CacheFs.fingerprint(spark, src)
+    val tag = s"stream_src_${CacheFs.AlgoVersion}_${table}_$fp"
+    CacheFs.getOrBuild(spark, tag) { stage =>
       val stageDir = new org.apache.hadoop.fs.Path(stage)
-      val to = new org.apache.hadoop.fs.Path(stage, s"$table.parquet")
-      val fsTo = stageDir.getFileSystem(conf)
+      val fsTo = CacheFs.fs(spark, stageDir)
       fsTo.mkdirs(stageDir)
-      org.apache.hadoop.fs.FileUtil.copy(
-        from.getFileSystem(conf), from, fsTo, to, false, conf)
-      graft.sources.CacheFs.touch(spark, stage)
+      org.apache.hadoop.fs.FileUtil.copy(fsFrom, srcPath, fsTo,
+        new org.apache.hadoop.fs.Path(stageDir, s"$table.parquet"),
+        false, fsTo.getConf)
+      CacheFs.touch(spark, stage)
     }
   }
 
@@ -333,11 +330,9 @@ object StreamingOracle {
     // re-run is a no-op maintain + read.
     "q398_stream_matview_final" -> { (spark, dir) =>
       val staged = stagedTable(spark, dir, "documents")
-      val fp = graft.sources.CacheFs.fingerprint(
-        spark, s"$dir/documents.parquet")
+      val fp = CacheFs.fingerprint(spark, s"$dir/documents.parquet")
       val root = new org.apache.hadoop.fs.Path(
-        graft.sources.CacheFs.root(spark),
-        s"stream_mv2_${graft.sources.CacheFs.AlgoVersion}_$fp").toString
+        CacheFs.root(spark), s"stream_mv2_${CacheFs.AlgoVersion}_$fp").toString
       StreamingMatView.maintainAvailableNow(
         spark, staged, spark.read.parquet(staged).schema,
         keys = Seq("source", "lang"),
@@ -379,11 +374,9 @@ object StreamingOracle {
     // a from-scratch build) makes q222's oracle apply verbatim.
     "q403_stream_indexed_bm25" -> { (spark, dir) =>
       val staged = stagedTable(spark, dir, "documents")
-      val fp = graft.sources.CacheFs.fingerprint(
-        spark, s"$dir/documents.parquet")
+      val fp = CacheFs.fingerprint(spark, s"$dir/documents.parquet")
       val root = new org.apache.hadoop.fs.Path(
-        graft.sources.CacheFs.root(spark),
-        s"stream_idx_${graft.sources.CacheFs.AlgoVersion}_$fp").toString
+        CacheFs.root(spark), s"stream_idx_${CacheFs.AlgoVersion}_$fp").toString
       StreamingIndexer.maintainAvailableNow(
         spark, staged, spark.read.parquet(staged).schema,
         "doc_id", "text",
@@ -446,10 +439,9 @@ object StreamingOracle {
     // (the same flush discipline the spec uses). The oracle is the
     // batch 30-minute-gap sessionization.
     "q405_stream_sessions_final" -> { (spark, dir) =>
-      val fp = graft.sources.CacheFs.fingerprint(
-        spark, s"$dir/events.parquet")
-      val tag = s"stream_sess_${graft.sources.CacheFs.AlgoVersion}_$fp"
-      val out = graft.sources.CacheFs.getOrBuild(spark, tag) { stage =>
+      val fp = CacheFs.fingerprint(spark, s"$dir/events.parquet")
+      val tag = s"stream_sess_${CacheFs.AlgoVersion}_$fp"
+      val out = CacheFs.getOrBuild(spark, tag) { stage =>
         withRocksDb(spark) {
           val sentinelUser = 999999999L
           val ev = Tables(spark, dir).events
@@ -491,10 +483,8 @@ object StreamingOracle {
           spark.catalog.dropTempView(name)
           // the staged source copy (+ checkpoint) served its purpose;
           // only the drained session table is the artifact
-          val srcPath = new org.apache.hadoop.fs.Path(s"$stage/src")
-          srcPath.getFileSystem(spark.sessionState.newHadoopConf())
-            .delete(srcPath, true)
-          graft.sources.CacheFs.touch(spark, stage)
+          CacheFs.delete(spark, s"$stage/src")
+          CacheFs.touch(spark, stage)
         }
       }
       spark.read.parquet(s"$out/out")
@@ -511,10 +501,9 @@ object StreamingOracle {
     "q406_stream_ann_final" -> { (spark, dir) =>
       val t = Tables(spark, dir)
       val e = t.embeddings
-      val fp = graft.sources.CacheFs.fingerprint(
-        spark, s"$dir/embeddings.parquet")
-      val tag = s"stream_ann_${graft.sources.CacheFs.AlgoVersion}_$fp"
-      val out = graft.sources.CacheFs.getOrBuild(spark, tag) { stage =>
+      val fp = CacheFs.fingerprint(spark, s"$dir/embeddings.parquet")
+      val tag = s"stream_ann_${CacheFs.AlgoVersion}_$fp"
+      val out = CacheFs.getOrBuild(spark, tag) { stage =>
         val nlist = math.ceil(math.sqrt(e.count().toDouble)).toInt
         val nprobe = math.max(2, math.ceil(nlist / 4.0).toInt)
         val cents = StreamingAnn.centroids(e, nlist)
@@ -530,7 +519,7 @@ object StreamingOracle {
         val q = StreamingAnn.serve(
           qs, lists, cents, nprobe, k = 5, sinkPath = s"$stage/out")
         try q.processAllAvailable() finally q.stop()
-        graft.sources.CacheFs.touch(spark, stage)
+        CacheFs.touch(spark, stage)
       }
       spark.read.parquet(s"$out/out")
         .orderBy(col("q_id"), col("rk"))
@@ -604,10 +593,9 @@ object StreamingOracle {
     // same three files.
     "q428_stream_ssouter_final" -> { (spark, dir) =>
       val t = Tables(spark, dir)
-      val fp = graft.sources.CacheFs.fingerprint(
-        spark, s"$dir/events.parquet")
-      val tag = s"stream_ssouter_${graft.sources.CacheFs.AlgoVersion}_$fp"
-      val staged = graft.sources.CacheFs.getOrBuild(spark, tag) { stage =>
+      val fp = CacheFs.fingerprint(spark, s"$dir/events.parquet")
+      val tag = s"stream_ssouter_${CacheFs.AlgoVersion}_$fp"
+      val staged = CacheFs.getOrBuild(spark, tag) { stage =>
         val ev = t.events
         ev.coalesce(1).write.mode("overwrite").parquet(s"$stage/p1")
         for (i <- 2 to 3) {
@@ -621,7 +609,7 @@ object StreamingOracle {
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$stage/p$i")
         }
-        graft.sources.CacheFs.touch(spark, stage)
+        CacheFs.touch(spark, stage)
       }
       hintParts(spark, staged)
       val stream = spark.readStream.schema(t.events.schema)
@@ -693,19 +681,16 @@ object StreamingOracle {
     "q409_stream_snapshot_final" -> { (spark, dir) =>
       import graft.sources.VersionedTable
       val staged = stagedTable(spark, dir, "documents")
-      val fp = graft.sources.CacheFs.fingerprint(
-        spark, s"$dir/documents.parquet")
-      // VersionedTable is the single-node versioned store (java.io
-      // roots by design — see its scaladoc); key the root by corpus
-      // fingerprint so testdata regeneration rebuilds cleanly
-      val root = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_stream_snap_$fp").toString
+      val fp = CacheFs.fingerprint(spark, s"$dir/documents.parquet")
+      // key the root by corpus fingerprint so testdata regeneration
+      // rebuilds cleanly
+      val root = new org.apache.hadoop.fs.Path(
+        CacheFs.root(spark), s"graft_stream_snap_$fp").toString
       StreamingSnapshots.ingestAvailableNow(
         spark, staged, spark.read.parquet(staged).schema,
         root, checkpoint = s"$root-ckpt")
       VersionedTable.read(
-          spark, root, VersionedTable.latestVersion(root))
+          spark, root, VersionedTable.latestVersion(spark, root))
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy(col("doc_id"))
     })

@@ -6,15 +6,18 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Cluster-portable materialized-cache filesystem layer.
+/** Cluster-portable filesystem layer for graft's materialized state.
   *
-  * Every build-once artifact (the near-dup edge list, the inverted
-  * index, external-format stages) routes its path resolution, corpus
-  * fingerprinting, and publication through here — all on the Hadoop
-  * `FileSystem` API, never `java.nio.file` — so the SAME code works
-  * when the corpus and the cache live on HDFS/S3/ABFS instead of the
-  * driver's local disk. (The reference keeps comparable durable state
-  * in per-location schema stores: modules/core/src/main/scala/dbms/
+  * Every graft-materialized artifact — build-once caches (the
+  * near-dup edge list, external-format stages), inverted indexes,
+  * versioned tables, streaming layouts and the persisted model home —
+  * routes its path resolution, listing, publication and deletion
+  * through here, all on the Hadoop `FileSystem` API, so the SAME code
+  * works when the state lives on HDFS/S3/ABFS instead of the driver's
+  * local disk, and a scheme-qualified root (`file:///...`) means what
+  * it says instead of a relative path under the JVM's working
+  * directory. (The reference keeps comparable durable state in
+  * per-location schema stores: modules/core/src/main/scala/dbms/
   * rdbms/location/RdbmsLocation.scala; our equivalent must be
   * scheme-agnostic because Spark's storage is.)
   *
@@ -60,19 +63,74 @@ object CacheFs {
   def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(hadoopConf(spark))
 
-  /** True iff a COMPLETE artifact (its committer `_SUCCESS`) exists. */
-  def complete(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir, "_SUCCESS")
+  /** True iff a COMPLETE artifact (its committer `_SUCCESS`, or the
+    * named marker) exists under `dir`. */
+  def complete(spark: SparkSession, dir: String,
+      name: String = "_SUCCESS"): Boolean = {
+    val p = new Path(dir, name)
     fs(spark, p).exists(p)
   }
 
   /** Create an empty `_SUCCESS`-style marker under `dir` through the
-    * Hadoop FileSystem (a java.nio create can't address a
+    * Hadoop FileSystem (a local-file create can't address a
     * scheme-qualified path). */
   def touch(spark: SparkSession, dir: String,
       name: String = "_SUCCESS"): Unit = {
     val p = new Path(dir, name)
     fs(spark, p).create(p, true).close()
+  }
+
+  /** Recursively delete `dir` (a no-op when absent). */
+  def delete(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir)
+    fs(spark, p).delete(p, true)
+    ()
+  }
+
+  /** Idempotent commit of one at-least-once batch into the append-only
+    * layout under `dir` (streaming foreachBatch replays a batch after
+    * a crash). `write` fills a stage dir `_stage_<tag>`; every part
+    * file in it then moves to the mirrored directory under `dir` as
+    * `b<tag>_p<i>.parquet` (i in part-name order per directory), and
+    * the `marker` file is written last. A replay of a committed batch
+    * is a no-op; a replay of a torn one first clears every
+    * `b<tag>_p*` file the torn attempt moved, then re-moves the full
+    * deterministic set — so the layout never holds a batch twice.
+    * The stage and the marker start with '_', so layout readers skip
+    * them. */
+  def commitBatch(spark: SparkSession, dir: String, tag: String,
+      marker: String)(write: String => Unit): Unit = {
+    val root = new Path(dir)
+    val filesystem = fs(spark, root)
+    filesystem.mkdirs(root)
+    if (filesystem.exists(new Path(root, marker))) return
+    val stage = new Path(root, s"_stage_$tag")
+    write(stage.toString)
+    val torn = scala.collection.mutable.ArrayBuffer.empty[Path]
+    val it = filesystem.listFiles(root, true)
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.startsWith(s"b${tag}_p")) torn += p
+    }
+    torn.foreach(filesystem.delete(_, false))
+    def hidden(p: Path) =
+      p.getName.startsWith("_") || p.getName.startsWith(".")
+    def moveTree(from: Path, to: Path): Unit = {
+      filesystem.mkdirs(to)
+      val (dirs, files) = filesystem.listStatus(from)
+        .filterNot(st => hidden(st.getPath)).partition(_.isDirectory)
+      files.map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        .sortBy(_.getName).zipWithIndex.foreach { case (p, i) =>
+          val dst = new Path(to, s"b${tag}_p$i.parquet")
+          if (!filesystem.rename(p, dst))
+            throw new java.io.IOException(s"could not move $p to $dst")
+        }
+      dirs.foreach(d =>
+        moveTree(d.getPath, new Path(to, d.getPath.getName)))
+    }
+    moveTree(stage, root)
+    filesystem.delete(stage, true)
+    touch(spark, dir, marker)
   }
 
   /** Content fingerprint of a corpus directory: SHA-1 over the sorted

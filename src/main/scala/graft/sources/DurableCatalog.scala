@@ -2,6 +2,8 @@ package graft.sources
 
 import java.sql.DriverManager
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 /** Durable catalog over embedded Derby (reference parity: sclera
@@ -363,14 +365,12 @@ object DurableCatalog {
     st.close()
   }
 
-  /** Parquet home for persisted model frames — sibling of the Derby
-    * catalog db, same single-node scope by design. */
-  private def modelsDir: java.io.File = {
-    val d = new java.io.File(
-      System.getProperty("java.io.tmpdir"), "graft_catalog_models")
-    d.mkdirs()
-    d
-  }
+  /** Parquet home for persisted model frames: `graft_catalog_models`
+    * under the driver's `java.io.tmpdir`, beside the Derby catalog
+    * db, qualified on the local filesystem through [[CacheFs.fs]]. */
+  private def modelsDir(spark: SparkSession): Path =
+    CacheFs.fs(spark, new Path("file:///")).makeQualified(
+      new Path(System.getProperty("java.io.tmpdir"), "graft_catalog_models"))
 
   /** Persist every named ML model (sclera parity: CREATE CLASSIFIER /
     * CLUSTERER / RECOMMENDER objects live in the metadata store) —
@@ -380,7 +380,7 @@ object DurableCatalog {
     * serving in-process, and an in-place overwrite would delete the
     * files under its lineage), the (name, path) pair into
     * graft_models. Replaces the stored set. */
-  def saveModels(spark: org.apache.spark.sql.SparkSession): Int =
+  def saveModels(spark: SparkSession): Int =
     withConn { c =>
       ensureModelTable(c)
       // prior committed (name -> path): kept through GC so a frame
@@ -393,12 +393,13 @@ object DurableCatalog {
         rs.close(); st.close()
         b.result()
       }
+      val home = modelsDir(spark)
       val names = spark.catalog.listTables().collect()
         .map(_.name).filter(_.startsWith("graft_model_"))
         .map(_.stripPrefix("graft_model_")).sorted.toSeq
       val entries = names.map { n =>
-        val path = new java.io.File(new java.io.File(modelsDir, n),
-          s"v-${java.util.UUID.randomUUID.toString.take(8)}").toString
+        val path = new Path(home,
+          s"$n/v-${java.util.UUID.randomUUID.toString.take(8)}").toString
         spark.table(s"graft_model_$n").write.parquet(path)
         n -> path
       }
@@ -423,21 +424,21 @@ object DurableCatalog {
       // one-save keep set is only safe single-process. Age-based
       // grace bounds that exposure: only dirs older than the window
       // (and out of the keep set) are deleted.
-      val keep = (entries.map(_._2) ++ prior.values).toSet
+      // (paths saved by older builds are bare local paths: qualify
+      // them so they match the listing)
+      val fs = CacheFs.fs(spark, home)
+      val keep = (entries.map(_._2) ++ prior.values)
+        .map(p => fs.makeQualified(new Path(p))).toSet
       val graceMs = sys.props.get("graft.catalog.modelGc.graceMs")
         .map(_.toLong).getOrElse(30L * 60L * 1000L)
       val cutoff = System.currentTimeMillis() - graceMs
-      def rmr(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmr)
-        f.delete()
-      }
-      Option(modelsDir.listFiles()).getOrElse(Array.empty)
-        .filter(_.isDirectory).foreach { nameDir =>
-          Option(nameDir.listFiles()).getOrElse(Array.empty)
-            .filter(d => d.isDirectory && d.getName.startsWith("v-"))
-            .filterNot(d => keep.contains(d.toString))
-            .filter(_.lastModified() < cutoff)
-            .foreach(rmr)
+      if (fs.exists(home))
+        fs.listStatus(home).filter(_.isDirectory).foreach { nameDir =>
+          fs.listStatus(nameDir.getPath)
+            .filter(d => d.isDirectory && d.getPath.getName.startsWith("v-"))
+            .filterNot(d => keep.contains(d.getPath))
+            .filter(_.getModificationTime < cutoff)
+            .foreach(d => fs.delete(d.getPath, true))
         }
       entries.size
     }
@@ -446,7 +447,7 @@ object DurableCatalog {
     * versioned parquet, persists eagerly (scoring must not re-read
     * per use, the CREATE-statement contract), and re-enters the
     * session registry + ModelCache. */
-  def loadModels(spark: org.apache.spark.sql.SparkSession): Int =
+  def loadModels(spark: SparkSession): Int =
     withConn { c =>
       ensureModelTable(c)
       val st = c.createStatement()

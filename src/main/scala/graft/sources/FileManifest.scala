@@ -27,9 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object FileManifest {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   /** Build (once) the manifest for `layoutDir` on `keyCol`; returns
     * the manifest directory. All filesystem access goes through the
     * Hadoop FileSystem, so a layout on HDFS/S3 works the same as a
@@ -37,7 +34,7 @@ object FileManifest {
   def build(spark: SparkSession, layoutDir: String, keyCol: String)
       : String = synchronized {
     val dir = new Path(layoutDir, s"_manifest_$keyCol")
-    if (!fs(spark, dir).exists(new Path(dir, "_SUCCESS"))) {
+    if (!CacheFs.complete(spark, dir.toString)) {
       spark.read.parquet(layoutDir)
         .groupBy(input_file_name().as("file"))
         .agg(min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi"),
@@ -83,7 +80,7 @@ object FileManifest {
       .select(col("file")).collect().map(r => decodePath(r.getString(0)))
       .toSet
     val root = new Path(layoutDir)
-    fs(spark, root).listStatus(root).toSeq
+    CacheFs.fs(spark, root).listStatus(root).toSeq
       .filter { st =>
         val n = st.getPath.getName
         st.isFile && n.endsWith(".parquet") &&
@@ -129,7 +126,7 @@ object FileManifest {
       numItems: Long = 65536L, numBits: Long = 524288L)
       : String = synchronized {
     val dir = new Path(layoutDir, s"_bloom_$keyCol")
-    if (!fs(spark, dir).exists(new Path(dir, "_SUCCESS"))) {
+    if (!CacheFs.complete(spark, dir.toString)) {
       spark.read.parquet(layoutDir)
         .groupBy(input_file_name().as("file"))
         .agg(expr(s"graft_bloom_agg($keyCol, ${numItems}L, ${numBits}L)")

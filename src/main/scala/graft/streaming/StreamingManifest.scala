@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.FileManifest
+import graft.sources.{CacheFs, FileManifest}
 
 /** Streaming lakehouse-layout maintenance (streaming twin of the
   * FileManifest family): new data files landing under `inPath` are
@@ -64,35 +64,15 @@ object StreamingManifest {
   }
 
   /** Idempotently append one micro-batch's rows to the flat layout:
-    * stage, then rename to `b<batchId>_p<i>.parquet` names guarded by
-    * a `_batch_<batchId>_SUCCESS` marker (both the marker and the
+    * [[graft.sources.CacheFs.commitBatch]] stages it, then renames
+    * its parts to `b<batchId>_p<i>.parquet` behind a
+    * `_batch_<batchId>_SUCCESS` marker (both the marker and the
     * stage dir start with '_', so layout readers and the manifest
     * file listing ignore them). */
   private[graft] def commitBatch(batch: DataFrame, batchId: Long,
-      layoutDir: String): Unit = {
-    import java.io.File
-    import java.nio.file.{Files, StandardCopyOption}
-    val root = new File(layoutDir)
-    root.mkdirs()
-    val marker = new File(root, s"_batch_${batchId}_SUCCESS")
-    if (marker.exists()) return
-    val stage = new File(root, s"_stage_$batchId")
-    batch.write.mode("overwrite").parquet(stage.toString)
-    // Clear any half-moved parts from a previous attempt at this batch.
-    root.listFiles().filter(_.getName.startsWith(s"b${batchId}_p"))
-      .foreach(_.delete())
-    val parts = stage.listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")
-        && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      Files.move(f.toPath,
-        new File(root, s"b${batchId}_p$i.parquet").toPath,
-        StandardCopyOption.REPLACE_EXISTING)
+      layoutDir: String): Unit =
+    CacheFs.commitBatch(batch.sparkSession, layoutDir, batchId.toString,
+      s"_batch_${batchId}_SUCCESS") { stage =>
+      batch.write.mode("overwrite").parquet(stage)
     }
-    stage.listFiles().foreach(_.delete())
-    stage.delete()
-    marker.createNewFile()
-    ()
-  }
 }

@@ -44,7 +44,7 @@ object StreamingSnapshots {
         // the batch alone. The batch is materialized via its own plan
         // (foreachBatch hands us a static frame), so the commit's
         // write is the only action.
-        val latest = VersionedTable.latestVersion(root)
+        val latest = VersionedTable.latestVersion(spark, root)
         if (batch.take(1).nonEmpty) {
           val next =
             if (latest < 0) batch

@@ -151,4 +151,24 @@ class CacheFsSpec extends AnyFunSuite {
         "metadata lane unexpectedly changed")
     } finally spark.conf.unset("spark.graft.cacheFingerprint")
   }
+
+  test("materialized state goes through CacheFs, not local-file APIs") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"run from the project root: $root")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val localFile =
+      """java\.io\.(File\b|\{[^}]*\bFile\b)|java\.nio\.file""".r
+    val hits = Seq("sources", "streaming", "operators", "plans", "queries")
+      .flatMap(p => files(new java.io.File(root, p)))
+      .filter { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try localFile.findFirstIn(src.mkString).nonEmpty finally src.close()
+      }.map(f => root.toPath.relativize(f.toPath).toString).sorted
+    // the one exception: Derby's home is a JVM property, not graft state
+    assert(hits == Seq("sources/ExternalLocation.scala"), hits.mkString(","))
+  }
 }

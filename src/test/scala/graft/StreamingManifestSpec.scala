@@ -107,4 +107,24 @@ class StreamingManifestSpec extends AnyFunSuite {
     assert(root.listFiles().map(_.getName).sorted.toSeq == names)
     assert(spark.read.parquet(layout).count() == 1000L)
   }
+
+  test("commitBatch on a file: URI layout commits once") {
+    val batch = Tables(spark, sfDir).lineitem.limit(500)
+      .repartition(2, col("l_orderkey"))
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_strmanifest_uri").toString
+    val layout = s"file://$base/layout"
+    graft.streaming.StreamingManifest.commitBatch(batch, 3L, layout)
+    val root = new java.io.File(s"$base/layout")
+    assert(new java.io.File(root, "_batch_3_SUCCESS").exists())
+    assert(spark.read.parquet(layout).count() == 500L)
+    // a replay of the committed batch changes nothing
+    val names = root.list().sorted.toSeq
+    graft.streaming.StreamingManifest.commitBatch(batch, 3L, layout)
+    assert(root.list().sorted.toSeq == names)
+    assert(spark.read.parquet(layout).count() == 500L)
+    // nothing lands in a relative `file:` tree under the working dir
+    val strays = new java.io.File(".").list().filter(_.startsWith("file:"))
+    assert(strays.isEmpty, strays.mkString(","))
+  }
 }

@@ -28,14 +28,14 @@ class StreamingSnapshotsSpec extends AnyFunSuite {
     first.coalesce(1).write.mode("overwrite").parquet(src + "/p1")
     StreamingSnapshots.ingestAvailableNow(
       spark, src + "/p*", docs.schema, root, ckpt)
-    val v0 = VersionedTable.latestVersion(root)
+    val v0 = VersionedTable.latestVersion(spark, root)
     assert(v0 >= 0)
     assert(VersionedTable.read(spark, root, v0).count() == first.count())
 
     second.coalesce(1).write.mode("overwrite").parquet(src + "/p2")
     StreamingSnapshots.ingestAvailableNow(
       spark, src + "/p*", docs.schema, root, ckpt)
-    val v1 = VersionedTable.latestVersion(root)
+    val v1 = VersionedTable.latestVersion(spark, root)
     assert(v1 > v0, "second run must commit a NEW version")
     // pinned old version untouched (snapshot isolation)
     assert(VersionedTable.read(spark, root, v0).count() == first.count())
@@ -59,13 +59,13 @@ class StreamingSnapshotsSpec extends AnyFunSuite {
       f.delete(); ()
     }
     deleteRec(new java.io.File(ckpt))
-    val versionsBefore = VersionedTable.versions(root)
+    val versionsBefore = VersionedTable.versions(spark, root)
     StreamingSnapshots.ingestAvailableNow(
       spark, src + "/p*", docs.schema, root, ckpt)
-    assert(VersionedTable.versions(root) == versionsBefore,
+    assert(VersionedTable.versions(spark, root) == versionsBefore,
       "checkpoint-loss replay committed duplicate versions")
     val relatest = VersionedTable
-      .read(spark, root, VersionedTable.latestVersion(root))
+      .read(spark, root, VersionedTable.latestVersion(spark, root))
     assert(relatest.count() == n &&
       relatest.exceptAll(docs).isEmpty && docs.exceptAll(relatest).isEmpty)
   }
@@ -77,7 +77,7 @@ class StreamingSnapshotsSpec extends AnyFunSuite {
     val v = VersionedTable.commitTagged(root, df, "batch_A")
     assert(VersionedTable.commitTagged(root, df, "batch_A") == v,
       "same-tag commit must return the existing version")
-    assert(VersionedTable.versions(root).size == 1)
+    assert(VersionedTable.versions(spark, root).size == 1)
 
     // torn stage from a crashed attempt: junk staging dir for the
     // NEXT version number must not block a fresh commit
@@ -86,8 +86,8 @@ class StreamingSnapshotsSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(
       new java.io.File(stage, "junk").toPath, "partial write")
     val v2 = VersionedTable.commitTagged(root, df, "batch_B")
-    assert(v2 == v + 1 && VersionedTable.versions(root).size == 2)
-    assert(VersionedTable.taggedVersion(root, "batch_B").contains(v2))
+    assert(v2 == v + 1 && VersionedTable.versions(spark, root).size == 2)
+    assert(VersionedTable.taggedVersion(spark, root, "batch_B").contains(v2))
     // the healed version reads cleanly
     assert(VersionedTable.read(spark, root, v2).count() == df.count())
   }
