@@ -174,6 +174,36 @@ object SeqMatchOp {
     new Nfa(trans.toMap, eps.toMap, s, e)
   }
 
+  /** DFA over the pattern's label ids. State 0 is the NFA's initial
+    * state set and -1 is dead: no run can continue, as with an empty
+    * NFA state set. A label outside the pattern always leads to -1. */
+  final class Dfa(labelIds: Map[String, Int], next: Array[Array[Int]],
+      accepting: Array[Boolean]) extends Serializable {
+    def step(state: Int, label: String): Int =
+      labelIds.get(label).fold(-1)(next(state)(_))
+    def accepts(state: Int): Boolean = accepting(state)
+  }
+
+  /** Subset construction over [[compile]]'s NFA: each reachable state
+    * set becomes one DFA state. */
+  def compileDfa(pattern: String): Dfa = {
+    val nfa = compile(pattern)
+    val labels = nfa.trans.keys.map(_._2).toVector.distinct.sorted
+    val sets = mutable.ArrayBuffer(nfa.initial)
+    val ids = mutable.HashMap(nfa.initial -> 0)
+    val next = mutable.ArrayBuffer.empty[Array[Int]]
+    while (next.length < sets.length) {
+      val from = sets(next.length)
+      next += labels.map { l =>
+        val to = nfa.step(from, l)
+        if (to.isEmpty) -1
+        else ids.getOrElseUpdate(to, { sets += to; sets.length - 1 })
+      }.toArray
+    }
+    new Dfa(labels.zipWithIndex.toMap, next.toArray,
+      sets.map(nfa.accepts).toArray)
+  }
+
   // ---- The relational operator ----
 
   /** Label rows by ordered predicates (the MATCH_RECOGNIZE DEFINE

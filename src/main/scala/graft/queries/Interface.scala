@@ -981,10 +981,10 @@ object Interface {
         "SELECT * FROM documents WHERE doc_id % 5 = 0")
       spark.sql("CREATE OR REPLACE TEMP VIEW old441 AS " +
         "SELECT * FROM documents WHERE doc_id % 5 <> 0")
-      val store = s"${System.getProperty("java.io.tmpdir")}" +
-        "/graft_sigstore_" +
-        graft.operators.TextSearchOps.corpusFingerprint(
-          s"$dir/documents.parquet")
+      val store = new org.apache.hadoop.fs.Path(
+        graft.sources.CacheFs.root(spark),
+        "graft_sigstore_" + graft.operators.TextSearchOps.corpusFingerprint(
+          s"$dir/documents.parquet")).toString
       spark.sql("GRAFT DEDUP STORE BUILD old441 ID doc_id TEXT text " +
         s"INTO '$store'").collect()
       spark.sql(s"GRAFT DEDUP new441 AGAINST STORE '$store' " +
@@ -1211,9 +1211,10 @@ object Interface {
     // EXTERNAL(name) — the write side of federation, driver-checked.
     "q363_create_external_sql" -> { (spark, dir) =>
       Tables(spark, dir).registerAll()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_extq_" +
-        graft.operators.TextSearchOps.corpusFingerprint(
-          s"$dir/nation.parquet")
+      val path = new org.apache.hadoop.fs.Path(
+        graft.sources.CacheFs.root(spark),
+        "graft_extq_" + graft.operators.TextSearchOps.corpusFingerprint(
+          s"$dir/nation.parquet")).toString
       spark.sql(s"GRAFT ADD LOCATION extq_csv CSV '$path'")
       spark.sql("GRAFT CREATE EXTERNAL extq_csv AS " +
         "SELECT n_regionkey, n_name FROM nation")
@@ -1242,9 +1243,10 @@ object Interface {
       Tables(spark, dir).registerAll()
       spark.sql("CREATE OR REPLACE TEMPORARY VIEW expq_v AS " +
         "SELECT r_regionkey, r_name FROM region")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_expq_" +
-        graft.operators.TextSearchOps.corpusFingerprint(
-          s"$dir/region.parquet")
+      val path = new org.apache.hadoop.fs.Path(
+        graft.sources.CacheFs.root(spark),
+        "graft_expq_" + graft.operators.TextSearchOps.corpusFingerprint(
+          s"$dir/region.parquet")).toString
       spark.sql(s"GRAFT EXPORT expq_v INTO '$path' FORMAT CSV")
       spark.read.option("header", "true").option("inferSchema", "true")
         .csv(path)

@@ -129,12 +129,21 @@ object StreamingOracle {
       val hint = Option(partsHint.remove(spark))
       hint.foreach(h =>
         spark.conf.set("spark.sql.shuffle.partitions", h.toString))
+      // a fresh checkpoint under the CacheFs root, deleted after the
+      // drain (without one, Spark makes a temporary directory under
+      // java.io.tmpdir)
+      val checkpoint = new org.apache.hadoop.fs.Path(CacheFs.root(spark),
+        s"_checkpoint_${name}_${java.util.UUID.randomUUID}").toString
       try {
         val q = ds.writeStream.outputMode(mode)
-          .format("memory").queryName(name).start()
+          .format("memory").queryName(name)
+          .option("checkpointLocation", checkpoint).start()
         try q.processAllAvailable() finally q.stop()
-      } finally hint.foreach(_ =>
-        spark.conf.set("spark.sql.shuffle.partitions", prev))
+      } finally {
+        CacheFs.delete(spark, checkpoint)
+        hint.foreach(_ =>
+          spark.conf.set("spark.sql.shuffle.partitions", prev))
+      }
     }
     spark.table(name)
   }
@@ -464,7 +473,8 @@ object StreamingOracle {
               EventStreams.readEvents(spark, s"$stage/src"),
               gapMinutes = 30)
             .writeStream.outputMode("append")
-            .format("memory").queryName(name).start()
+            .format("memory").queryName(name)
+            .option("checkpointLocation", s"$stage/checkpoint").start()
           try {
             q.processAllAvailable()
             // two sentinel batches: the first advances max event
@@ -481,9 +491,10 @@ object StreamingOracle {
               col("session_end"), col("n_events"))
             .write.parquet(s"$stage/out")
           spark.catalog.dropTempView(name)
-          // the staged source copy (+ checkpoint) served its purpose;
-          // only the drained session table is the artifact
+          // the staged source copy and the checkpoint served their
+          // purpose; only the drained session table is the artifact
           CacheFs.delete(spark, s"$stage/src")
+          CacheFs.delete(spark, s"$stage/checkpoint")
           CacheFs.touch(spark, stage)
         }
       }

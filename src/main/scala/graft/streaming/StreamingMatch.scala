@@ -12,15 +12,15 @@ import graft.operators.SeqMatchOp
 case class MatchEvent(
     user_id: Long, ts: Timestamp, event_id: Long, event_type: String)
 
-/** A buffered row of the in-flight run (ordinal kept as micros so the
-  * state is a flat, efficiently-encoded product type). */
-case class MatchRunRow(ordMicros: Long, label: String)
-
-/** Keyed matcher state carried between micro-batches: the NFA state
-  * set, the buffered candidate run, and the per-key match counter —
-  * O(pattern + current run) per key, independent of stream length. */
+/** Keyed matcher state carried between micro-batches: the DFA state,
+  * the in-flight run (length, first and last ordinal in micros, the
+  * `->`-joined labels) and the per-key match counter. O(current run)
+  * per key, independent of stream length. Every field is a scalar, so
+  * the state deserializer has no collection expression and a batch's
+  * generated code is the same as the one before it. */
 case class MatchKeyState(
-    states: Seq[Int], run: Seq[MatchRunRow], matchId: Long)
+    dfaState: Int, n: Int, firstOrd: Long, lastOrd: Long, path: String,
+    matchId: Long)
 
 /** One emitted match. */
 case class StreamMatchOut(
@@ -30,8 +30,15 @@ case class StreamMatchOut(
 /** Streaming row-sequence regex MATCH — the incremental twin of
   * graft.operators.SeqMatchOp (reference: analytics/sequence/matcher —
   * sclera evaluates the matcher over unbounded ordered streams; here
-  * the same Thompson-NFA discipline runs under
-  * flatMapGroupsWithState).
+  * it runs under flatMapGroupsWithState).
+  *
+  * The pattern is compiled once per query into a DFA
+  * ([[SeqMatchOp.compileDfa]], subset construction over the batch
+  * operator's Thompson NFA), so a key steps one `Int` per event and
+  * its state is the flat [[MatchKeyState]]. MATCH checkpoints written
+  * with the earlier state schema (NFA state sets and buffered run
+  * rows) cannot be restored; such queries restart from a new
+  * checkpoint.
   *
   * Semantics are identical to the batch operator (leftmost,
   * non-overlapping, shortest): a match emits as soon as the automaton
@@ -41,7 +48,7 @@ case class StreamMatchOut(
   * appends in order — reordering across batches is the source's
   * contract, as in the reference).
   *
-  * StreamingMatchSpec cross-checks: one-batch streaming output ==
+  * StreamingMatchSpec cross-checks streaming output ==
   * SeqMatchOp.matchPattern over the same events.
   */
 object StreamingMatch {
@@ -58,53 +65,56 @@ object StreamingMatch {
   def matches(events: DataFrame, pattern: String): Dataset[StreamMatchOut] = {
     val spark = events.sparkSession
     import spark.implicits._
+    val dfa = SeqMatchOp.compileDfa(pattern)
+    require(!dfa.accepts(0),
+      s"MATCH pattern accepts the empty sequence: $pattern")
     events
       .select(col("user_id").cast("long").as("user_id"), col("ts"),
         col("event_id").cast("long").as("event_id"), col("event_type"))
       .as[MatchEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(process(pattern))
+        OutputMode.Append, GroupStateTimeout.NoTimeout)(process(dfa))
   }
 
-  private def process(pattern: String)(
+  private def process(dfa: SeqMatchOp.Dfa)(
       key: Long, it: Iterator[MatchEvent],
       gs: GroupState[MatchKeyState]): Iterator[StreamMatchOut] = {
-    val nfa = SeqMatchOp.compile(pattern)
-    val st0 = gs.getOption.getOrElse(
-      MatchKeyState(nfa.initial.toSeq.sorted, Nil, 0L))
-    var states = st0.states.toSet
-    var run = st0.run.toVector
-    var matchId = st0.matchId
+    val st = gs.getOption.getOrElse(MatchKeyState(0, 0, 0L, 0L, "", 0L))
+    var state = st.dfaState
+    var n = st.n
+    var firstOrd = st.firstOrd
+    var lastOrd = st.lastOrd
+    val path = new StringBuilder(st.path)
+    var matchId = st.matchId
     val out = Vector.newBuilder[StreamMatchOut]
 
-    def restart(): Unit = { states = nfa.initial; run = Vector.empty }
-    def emit(): Unit = {
-      matchId += 1
-      out += StreamMatchOut(
-        key, matchId, run.length,
-        toTs(run.head.ordMicros), toTs(run.last.ordMicros),
-        run.map(_.label).mkString("->"))
-    }
+    def restart(): Unit = { state = 0; n = 0; path.clear() }
 
     val ordered = it.toVector.sortBy(e => (micros(e.ts), e.event_id))
     for (e <- ordered) {
       val label = e.event_type
-      val nxt = nfa.step(states, label)
-      if (nxt.isEmpty) {
-        // dead: drop the current run, retry this row as a fresh start
-        restart()
-        val retry = nfa.step(states, label)
-        if (retry.nonEmpty) {
-          states = retry; run :+= MatchRunRow(micros(e.ts), label)
-        }
-      } else {
-        states = nxt; run :+= MatchRunRow(micros(e.ts), label)
+      var next = dfa.step(state, label)
+      // dead: drop the current run, retry this row as a fresh start
+      if (next < 0) { restart(); next = dfa.step(0, label) }
+      if (next >= 0) {
+        val ord = micros(e.ts)
+        if (n == 0) firstOrd = ord else path ++= "->"
+        path ++= label
+        lastOrd = ord
+        n += 1
+        state = next
       }
-      if (nfa.accepts(states)) { emit(); restart() }
+      if (dfa.accepts(state)) {
+        matchId += 1
+        out += StreamMatchOut(key, matchId, n, toTs(firstOrd),
+          toTs(lastOrd), path.toString)
+        restart()
+      }
     }
 
-    gs.update(MatchKeyState(states.toSeq.sorted, run.toList, matchId))
+    gs.update(
+      MatchKeyState(state, n, firstOrd, lastOrd, path.toString, matchId))
     out.result().iterator
   }
 }

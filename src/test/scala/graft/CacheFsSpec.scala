@@ -160,15 +160,26 @@ class CacheFsSpec extends AnyFunSuite {
         if (f.isDirectory) files(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil
       }
+    val sources = Seq("sources", "streaming", "operators", "plans", "queries")
+      .flatMap(p => files(new java.io.File(root, p)))
+      .map { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try root.toPath.relativize(f.toPath).toString -> src.mkString
+        finally src.close()
+      }
+    def hits(pattern: scala.util.matching.Regex): Seq[String] =
+      sources.collect {
+        case (name, src) if pattern.findFirstIn(src).nonEmpty => name
+      }.sorted
     val localFile =
       """java\.io\.(File\b|\{[^}]*\bFile\b)|java\.nio\.file""".r
-    val hits = Seq("sources", "streaming", "operators", "plans", "queries")
-      .flatMap(p => files(new java.io.File(root, p)))
-      .filter { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try localFile.findFirstIn(src.mkString).nonEmpty finally src.close()
-      }.map(f => root.toPath.relativize(f.toPath).toString).sorted
     // the one exception: Derby's home is a JVM property, not graft state
-    assert(hits == Seq("sources/ExternalLocation.scala"), hits.mkString(","))
+    assert(hits(localFile) == Seq("sources/ExternalLocation.scala"),
+      hits(localFile).mkString(","))
+    // driver-local roots: only Derby's home and the model home, which
+    // sits beside the Derby catalog that records its paths
+    val tmpdir = "\"java\\.io\\.tmpdir\"".r
+    assert(hits(tmpdir) == Seq("sources/DurableCatalog.scala",
+      "sources/ExternalLocation.scala"), hits(tmpdir).mkString(","))
   }
 }
