@@ -204,6 +204,16 @@ object SeqMatchOp {
       sets.map(nfa.accepts).toArray)
   }
 
+  /** Reject, on the driver, a pattern that accepts the empty sequence:
+    * it would "match" before any row, and the matchers have no run to
+    * emit. Every MATCH entry point (both batch matchers and
+    * StreamingMatch) calls this before planning. */
+  def requireNonEmptyMatch(pattern: String): Unit = {
+    val nfa = compile(pattern)
+    require(!nfa.accepts(nfa.initial),
+      s"MATCH pattern accepts the empty sequence: $pattern")
+  }
+
   // ---- The relational operator ----
 
   /** Label rows by ordered predicates (the MATCH_RECOGNIZE DEFINE
@@ -250,6 +260,7 @@ object SeqMatchOp {
       df: DataFrame, keyCol: String, ordCol: String, labelCol: String,
       pattern: String, valueCol: Option[String] = None,
       rich: Boolean = false, arg: Boolean = false): DataFrame = {
+    requireNonEmptyMatch(pattern)
     val spark = df.sparkSession
     val ordType = df.schema(ordCol).dataType
     val labels = pattern.split("[()|*+?\\s]+").filter(_.nonEmpty)
@@ -378,6 +389,7 @@ object SeqMatchOp {
   def matchPatternMulti(
       df: DataFrame, keyCol: String, ordCol: String, labelsCol: String,
       pattern: String): DataFrame = {
+    requireNonEmptyMatch(pattern)
     val ordType = df.schema(ordCol).dataType
     val outSchema = StructType(Seq(
       StructField(keyCol, LongType),

@@ -45,9 +45,9 @@ case class GraftStatementCommand(
 }
 
 object GraftStatementCommand {
-  /** All-string status output (the statusPlan shape most GRAFT admin
-    * statements render): column names with a single row of values
-    * computed by `body` at RUN time. */
+  /** All-string status output (the shape most GRAFT admin statements
+    * render): column names with a single row of values computed by
+    * `body` at RUN time. */
   def status(label: String, cols: Seq[String])(
       body: SparkSession => Seq[String]): GraftStatementCommand =
     GraftStatementCommand(label, cols.map(_ -> (StringType: DataType)),

@@ -65,9 +65,8 @@ object StreamingMatch {
   def matches(events: DataFrame, pattern: String): Dataset[StreamMatchOut] = {
     val spark = events.sparkSession
     import spark.implicits._
+    SeqMatchOp.requireNonEmptyMatch(pattern)
     val dfa = SeqMatchOp.compileDfa(pattern)
-    require(!dfa.accepts(0),
-      s"MATCH pattern accepts the empty sequence: $pattern")
     events
       .select(col("user_id").cast("long").as("user_id"), col("ts"),
         col("event_id").cast("long").as("event_id"), col("event_type"))

@@ -136,6 +136,42 @@ class ExplainNoExecSpec extends AnyFunSuite {
     assert(spark.conf.getOption(confKey).isEmpty)
   }
 
+  test("EXPLAIN PLOT ... RENDER starts no Spark job") {
+    Tables(spark, sfDir).registerAll()
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("xne_plot", "explain plot render")
+      // a single-geom shape and the many-clause binned shape
+      explain("GRAFT PLOT lineitem SEGMENTS X l_quantity " +
+        "XEND l_extendedprice Y l_discount YEND l_tax LIMIT 50 RENDER")
+      explain("GRAFT PLOT lineitem X l_extendedprice FROM 0 TO 100000 " +
+        "BINS 8 Y AVG l_quantity SERIES l_returnflag GEOM POINT " +
+        "POSITION JITTER SCALE LOG VLINE 10,20 HLINE 5 " +
+        "REGIONX 1 2 REGIONY 3 4 ABLINE 0.5 1 RENDER 'xne plot'")
+      // the listener bus delivers job starts in order: once a fence
+      // job is seen, every earlier job start has been seen too
+      sc.setJobGroup("xne_fence", "fence")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("xne_fence") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("xne_fence"))
+      assert(!groups.contains("xne_plot"),
+        "EXPLAIN of a PLOT RENDER ran a Spark job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("DML statements return status rows when actually run") {
     Tables(spark, sfDir).nation.createOrReplaceTempView("xne_run")
     val r = spark.sql(

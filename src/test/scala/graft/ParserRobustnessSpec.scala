@@ -51,6 +51,14 @@ class ParserRobustnessSpec extends AnyFunSuite {
     // ... while the same tokens OUTSIDE literals still rewrite
     assert(spark.sql("SELECT n FROM SEQUENCE(4) " +
       "WHERE n > 1 FETCH FIRST 2 ROWS ONLY").count() == 2)
+    // SEQUENCE(n) becomes an inline relation: parsing registers
+    // nothing (a length no other test uses, so no earlier statement
+    // registered a view for it), and a user alias names the relation
+    val before = spark.catalog.listTables().collect().map(_.name).toSet
+    spark.sessionState.sqlParser.parsePlan("SELECT n FROM SEQUENCE(41)")
+    assert(spark.catalog.listTables().collect().map(_.name).toSet == before)
+    assert(spark.sql("SELECT s.n FROM SEQUENCE(3) s WHERE s.n > 1")
+      .collect().map(_.getLong(0)).toSeq == Seq(2L, 3L))
   }
 
   test("malformed graft statements fail as SQL, not silently") {
@@ -63,6 +71,18 @@ class ParserRobustnessSpec extends AnyFunSuite {
     assertThrows[Exception] {
       spark.sql("GRAFT DTW only_one_table").collect()
     }
+    // every keyword of the statement table: a truncated statement
+    // names its keyword and the accepted forms
+    graft.plans.GraftSqlParser.keywords.foreach { kw =>
+      val e = intercept[Exception] {
+        spark.sql(s"graft ${kw.toLowerCase}").collect()
+      }
+      assert(e.getMessage.contains(s"GRAFT $kw"), e.getMessage)
+    }
+    val unknown = intercept[Exception] {
+      spark.sql("graft frobnicate x").collect()
+    }
+    assert(unknown.getMessage.contains("FROBNICATE"), unknown.getMessage)
   }
 
   test("GRAFT CHECK evaluates named rules in one statement") {

@@ -53,6 +53,16 @@ class StreamingMatchSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       StreamingMatch.matches(stream, "view*"))
     assert(e.getMessage.contains("empty sequence"))
+    // the batch matchers reject it on the driver too, through both
+    // GRAFT MATCH forms
+    Tables(spark, sfDir).registerAll()
+    Seq("LABEL event_type", "LABEL BY event_type").foreach { labels =>
+      val b = intercept[IllegalArgumentException](
+        spark.sql("GRAFT MATCH 'view*' ON events KEY user_id ORDER ts " +
+          labels).collect())
+      assert(b.getMessage.contains(
+        "MATCH pattern accepts the empty sequence: view*"), b.getMessage)
+    }
   }
 
   test("MATCH micro-batches stop compiling code after the second batch") {
