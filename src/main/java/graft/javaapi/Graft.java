@@ -51,20 +51,18 @@ public final class Graft {
         return this;
     }
 
-    /** Execute any statement — full Spark SQL plus the GRAFT dialect
-     * (MATCH, SEARCH, ASOF, CHECK, ADD LOCATION, ...). */
+    /** Any statement — full Spark SQL plus the GRAFT dialect (MATCH,
+     * SEARCH, ASOF, CHECK, ADD LOCATION, ...) — as a Dataset. */
     public Dataset<Row> sql(String statement) {
         return spark.sql(statement);
     }
 
-    /** Execute and collect (small results; prefer {@link #sql} and
-     * Dataset operations for anything large). */
+    /** Execute through the one statement runner and collect (small
+     * results; prefer {@link #sql} for anything large). */
     public List<Row> sqlToList(String statement) {
-        List<Row> out = new ArrayList<>();
-        for (Row r : spark.sql(statement).collectAsList()) {
-            out.add(r);
-        }
-        return out;
+        return new ArrayList<>(scala.jdk.javaapi.CollectionConverters.asJava(
+            graft.service.StatementRunner.run(spark, statement,
+                scala.Option.empty()).rows().toSeq()));
     }
 
     public void stop() {

@@ -8,16 +8,18 @@ import java.sql.{Connection, Driver, DriverManager, ResultSet,
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
+import graft.service.{StatementError, StatementRunner}
+
 /** JDBC driver over the engine (reference: modules/interfaces/jdbc —
   * sclera exposes itself to JDBC clients; a user points
   * DriverManager at `jdbc:scleradb:...` and runs statements). The
   * graft twin: `jdbc:graft:<table-dir>` boots (or reuses) the
   * extension-wired SparkSession, registers the directory's tables,
   * and serves the full Spark SQL + GRAFT dialect through standard
-  * java.sql Connection/Statement/ResultSet.
+  * java.sql Connection/Statement/ResultSet, each statement through
+  * [[graft.service.StatementRunner]]; `Statement.cancel()` cancels it.
   *
-  * Engineering shape: this is a CLIENT facade, not a wire protocol —
-  * results materialize through the driver exactly like a collect().
+  * Engineering shape: this is a CLIENT facade, not a wire protocol.
   * The java.sql interfaces are huge and mostly irrelevant here, so
   * the supported surface is implemented over dynamic proxies: every
   * method the facade doesn't support throws
@@ -53,16 +55,26 @@ object GraftJdbc {
           case "equals" => java.lang.Boolean.valueOf(p eq a(0))
           case _ => null
         }
-        else handler.applyOrElse((m.getName, a),
+        else try handler.applyOrElse((m.getName, a),
           (_: (String, Array[AnyRef])) =>
             throw new SQLFeatureNotSupportedException(
               s"${iface.getSimpleName}.${m.getName} not supported " +
                 "by the graft JDBC facade"))
+        catch { case e: StatementError => throw sqlError(e) }
       }
     }
     iface.cast(Proxy.newProxyInstance(
       iface.getClassLoader, Array(iface), h))
   }
+
+  /** SQLState 42000 for a bad statement, HY008 for a cancelled one,
+    * XX000 for an engine fault; the Spark exception stays the cause. */
+  private def sqlError(e: StatementError): SQLException =
+    new SQLException(e.getMessage, e.kind match {
+      case StatementError.User => "42000"
+      case StatementError.Cancelled => "HY008"
+      case StatementError.Fault => "XX000"
+    }, e.getCause)
 
   private def sqlType(dt: DataType): Int = dt match {
     case IntegerType => Types.INTEGER
@@ -80,45 +92,41 @@ object GraftJdbc {
     case _ => Types.OTHER
   }
 
-  /** INCREMENTAL result set: rows stream from `it` (a
-    * Dataset.toLocalIterator), so the driver JVM holds at most one
+  /** INCREMENTAL result set: rows stream from `it` (the runner's
+    * uncapped iterator), so the driver JVM holds at most one
     * Spark partition of the result at a time and upstream jobs run
     * lazily as the client iterates — a client that reads k rows of a
     * huge result computes only the partitions those k rows touch,
     * never the whole result (reference modules/interfaces/jdbc;
     * JdbcIncrementalFetchSpec proves it on a 10^8-row query). */
   private def resultSet(schema: StructType,
-      it: java.util.Iterator[org.apache.spark.sql.Row]): ResultSet = {
+      it: Iterator[org.apache.spark.sql.Row]): ResultSet = {
     var current: org.apache.spark.sql.Row = null
     var nullSeen = false
     var closed = false
-    def col(label: String): Int = {
-      val i = schema.fieldIndex(label)
-      i + 1
-    }
-    def value(i: Int): AnyRef = {
+    /** The current row's value at a 1-based index or a column label. */
+    def value(at: AnyRef): AnyRef = {
       if (current == null || closed)
         throw new SQLException("cursor out of range")
-      val v = current.get(i - 1)
+      val v = current.get(at match {
+        case i: Integer => i - 1
+        case s: String => schema.fieldIndex(s)
+      })
       nullSeen = v == null
       v.asInstanceOf[AnyRef]
     }
-    def num(i: Int): Number = value(i) match {
-      case null => null
+    def num(at: AnyRef): Option[Number] = Option(value(at)).map {
       case n: Number => n
       case other => throw new SQLException(s"not numeric: $other")
     }
+    def field(a: Array[AnyRef]) = schema(a(0).asInstanceOf[Integer] - 1)
     lazy val meta: ResultSetMetaData =
       proxy(classOf[ResultSetMetaData]) {
         case ("getColumnCount", _) => Integer.valueOf(schema.length)
-        case ("getColumnName", a) =>
-          schema(a(0).asInstanceOf[Integer] - 1).name
-        case ("getColumnLabel", a) =>
-          schema(a(0).asInstanceOf[Integer] - 1).name
-        case ("getColumnTypeName", a) =>
-          schema(a(0).asInstanceOf[Integer] - 1).dataType.simpleString
-        case ("getColumnType", a) => Integer.valueOf(
-          sqlType(schema(a(0).asInstanceOf[Integer] - 1).dataType))
+        case ("getColumnName" | "getColumnLabel", a) => field(a).name
+        case ("getColumnTypeName", a) => field(a).dataType.simpleString
+        case ("getColumnType", a) =>
+          Integer.valueOf(sqlType(field(a).dataType))
         case ("isNullable", _) =>
           Integer.valueOf(ResultSetMetaData.columnNullable)
       }
@@ -132,42 +140,14 @@ object GraftJdbc {
       case ("wasNull", _) => java.lang.Boolean.valueOf(nullSeen)
       case ("getMetaData", _) => meta
       case ("findColumn", a) =>
-        Integer.valueOf(col(a(0).asInstanceOf[String]))
-      case ("getObject", a) => a(0) match {
-        case i: Integer => value(i)
-        case s: String => value(col(s))
-      }
-      case ("getString", a) =>
-        val v = a(0) match {
-          case i: Integer => value(i)
-          case s: String => value(col(s))
-        }
-        if (v == null) null else v.toString
-      case ("getInt", a) =>
-        val n = a(0) match {
-          case i: Integer => num(i); case s: String => num(col(s))
-        }
-        Integer.valueOf(if (n == null) 0 else n.intValue)
-      case ("getLong", a) =>
-        val n = a(0) match {
-          case i: Integer => num(i); case s: String => num(col(s))
-        }
-        java.lang.Long.valueOf(if (n == null) 0L else n.longValue)
-      case ("getDouble", a) =>
-        val n = a(0) match {
-          case i: Integer => num(i); case s: String => num(col(s))
-        }
-        java.lang.Double.valueOf(if (n == null) 0.0 else n.doubleValue)
-      case ("getBoolean", a) =>
-        val v = a(0) match {
-          case i: Integer => value(i); case s: String => value(col(s))
-        }
-        java.lang.Boolean.valueOf(
-          v != null && v.asInstanceOf[java.lang.Boolean])
-      case ("getTimestamp", a) => a(0) match {
-        case i: Integer => value(i)
-        case s: String => value(col(s))
-      }
+        Integer.valueOf(schema.fieldIndex(a(0).asInstanceOf[String]) + 1)
+      case ("getObject" | "getTimestamp", a) => value(a(0))
+      case ("getString", a) => Option(value(a(0))).map(_.toString).orNull
+      case ("getInt", a) => Int.box(num(a(0)).fold(0)(_.intValue))
+      case ("getLong", a) => Long.box(num(a(0)).fold(0L)(_.longValue))
+      case ("getDouble", a) => Double.box(num(a(0)).fold(0.0)(_.doubleValue))
+      case ("getBoolean", a) => Option(value(a(0)))
+        .fold(java.lang.Boolean.FALSE)(_.asInstanceOf[java.lang.Boolean])
     }
   }
 
@@ -177,22 +157,21 @@ object GraftJdbc {
     var last: ResultSet = null
     var maxRows = 0
     var fetchSize = 0
-    def runQuery(sql: String): ResultSet = {
-      val df0 = spark.sql(sql)
+    @volatile var running: StatementRunner.Handle = null
+    def run(sql: AnyRef): StatementRunner.Result = {
+      running = new StatementRunner.Handle(spark)
       // setMaxRows is a PLAN-LEVEL cap, not a client-side drop: the
       // limit lands in the Spark plan, so upstream work shrinks too.
-      val df = if (maxRows > 0) df0.limit(maxRows) else df0
-      val rs = resultSet(df.schema, df.toLocalIterator())
-      last = rs
-      rs
+      running.run(sql.asInstanceOf[String], Some(maxRows).filter(_ > 0))
+    }
+    def query(sql: AnyRef): ResultSet = {
+      val r = run(sql); last = resultSet(r.schema, r.rows); last
     }
     proxy(classOf[Statement]) {
-      case ("executeQuery", a) => runQuery(a(0).asInstanceOf[String])
-      case ("execute", a) =>
-        runQuery(a(0).asInstanceOf[String]); java.lang.Boolean.TRUE
+      case ("executeQuery", a) => query(a(0))
+      case ("execute", a) => query(a(0)); java.lang.Boolean.TRUE
       case ("executeUpdate", a) =>
-        spark.sql(a(0).asInstanceOf[String]).collect()
-        Integer.valueOf(0)
+        run(a(0)).rows.foreach(_ => ()); Integer.valueOf(0)
       case ("getResultSet", _) => last
       case ("getUpdateCount", _) => Integer.valueOf(-1)
       case ("getMoreResults", _) => java.lang.Boolean.FALSE
@@ -205,7 +184,7 @@ object GraftJdbc {
       case ("setFetchSize", a) =>
         fetchSize = a(0).asInstanceOf[Integer].intValue; null
       case ("getFetchSize", _) => Integer.valueOf(fetchSize)
-      case ("cancel", _) => null
+      case ("cancel", _) => Option(running).foreach(_.cancel()); null
       case ("getWarnings", _) => null
       case ("clearWarnings", _) => null
     }

@@ -3,23 +3,23 @@ package graft.service
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 
 /** HTTP query service (reference: modules/service — sclera's web
-  * service executes statements over HTTP for non-JVM clients). The
-  * graft twin rides the JDK's built-in httpserver (zero deps):
+  * service executes statements over HTTP for non-JVM clients), on the
+  * JDK's built-in httpserver (zero deps):
   *
   *   GET  /health        -> {"status":"ok"}
   *   POST /sql  (body = statement text)
   *       -> {"columns":[...], "rows":[[...], ...], "n":N}
   *
-  * The full Spark SQL + GRAFT dialect flows through; results cap at
-  * `maxRows` (a service returns pages, not corpora — large extracts
-  * belong in a sink write, which the dialect itself can do). JSON is
-  * emitted with the same full escaping discipline as Verify's
-  * oracle_sql.json (every control char escaped).
+  * Statements run through [[StatementRunner]], capped at `maxRows` (a
+  * service returns pages, not corpora — large extracts belong in a sink
+  * write). A failed one answers {"error": ...}: 400 when the statement
+  * is at fault, 500 when the engine is. JSON strings escape every
+  * control char, as Verify's oracle_sql.json does.
   */
 class HttpService(spark: SparkSession, port: Int, maxRows: Int = 1000) {
 
@@ -53,43 +53,55 @@ class HttpService(spark: SparkSession, port: Int, maxRows: Int = 1000) {
     case other => jstr(other.toString)
   }
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+  private def arr(xs: Seq[String]): String = xs.mkString("[", ",", "]")
+
+  private val Json = "application/json"
+  private val Html = "text/html; charset=utf-8"
+
+  private def respond(ex: HttpExchange, code: Int, contentType: String,
+      body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(code, bytes.length.toLong)
     val os = ex.getResponseBody
     try os.write(bytes) finally os.close()
   }
 
-  server.createContext("/health", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit =
-      respond(ex, 200, """{"status":"ok"}""")
-  })
+  /** The statement of a request: the POST body, or GET's `?q=`. */
+  private def statement(ex: HttpExchange): String = (
+    if (ex.getRequestMethod == "POST")
+      new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+    else Option(ex.getRequestURI.getRawQuery).toSeq.flatMap(_.split("&"))
+      .collectFirst { case p if p.startsWith("q=") =>
+        java.net.URLDecoder.decode(p.drop(2), "UTF-8") }.getOrElse("")
+  ).trim
 
-  server.createContext("/sql", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      if (ex.getRequestMethod != "POST") {
-        respond(ex, 405, """{"error":"POST a statement to /sql"}""")
-        return
-      }
-      val stmt = new String(
-        ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8).trim
-      try {
-        val df = spark.sql(stmt)
-        val rows = df.limit(maxRows).collect()
-        val cols = df.columns.map(jstr).mkString("[", ",", "]")
-        val data = rows.map(_.toSeq.map(jval).mkString("[", ",", "]"))
-          .mkString("[", ",", "]")
-        respond(ex, 200,
-          s"""{"columns":$cols,"rows":$data,"n":${rows.length}}""")
-      } catch {
-        case e: Exception => respond(ex, 400,
-          s"""{"error":${jstr(Option(e.getMessage)
-            .getOrElse(e.getClass.getName).linesIterator
-            .take(3).mkString(" / "))}}""")
-      }
+  /** Answer with `ok` of the statement's columns and first `maxRows`
+    * rows, or with `err` of the runner's message. */
+  private def serve(ex: HttpExchange, contentType: String, stmt: String)(
+      ok: (Seq[String], Vector[Row]) => String,
+      err: String => String): Unit = {
+    val (code, body) = try {
+      val r = StatementRunner.run(spark, stmt, Some(maxRows))
+      (200, ok(r.schema.fieldNames.toSeq, r.rows.toVector))
+    } catch {
+      case e: StatementError =>
+        (if (e.kind == StatementError.User) 400 else 500, err(e.getMessage))
     }
-  })
+    respond(ex, code, contentType, body)
+  }
+
+  server.createContext("/health", (ex: HttpExchange) =>
+    respond(ex, 200, Json, """{"status":"ok"}"""))
+
+  server.createContext("/sql", (ex: HttpExchange) =>
+    if (ex.getRequestMethod != "POST")
+      respond(ex, 405, Json, """{"error":"POST a statement to /sql"}""")
+    else serve(ex, Json, statement(ex))((cols, rows) =>
+      s"""{"columns":${arr(cols.map(jstr))},"rows":""" +
+        arr(rows.map(r => arr(r.toSeq.map(jval)))) +
+        s""","n":${rows.length}}""",
+      msg => s"""{"error":${jstr(msg)}}"""))
 
   // ---- web display client (reference: modules/interfaces/display
   // Display.scala — sclera renders results to a browser). GET
@@ -116,57 +128,22 @@ class HttpService(spark: SparkSession, port: Int, maxRows: Int = 1000) {
       "th{background:#eee}caption{text-align:left;padding:4px 0;" +
       "font-weight:bold}</style></head><body>" + body + "</body></html>"
 
-  private def respondHtml(ex: HttpExchange, code: Int,
-      body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    val os = ex.getResponseBody
-    try os.write(bytes) finally os.close()
-  }
-
-  server.createContext("/display", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      val stmt =
-        if (ex.getRequestMethod == "POST")
-          new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8).trim
-        else Option(ex.getRequestURI.getRawQuery).getOrElse("")
-          .split("&").collectFirst {
-            case p if p.startsWith("q=") =>
-              java.net.URLDecoder.decode(p.drop(2), "UTF-8").trim
-          }.getOrElse("")
-      if (stmt.isEmpty) {
-        respondHtml(ex, 400, htmlPage("graft",
-          "<p>pass a statement: GET /display?q=... or POST it</p>"))
-        return
-      }
-      try {
-        val df = spark.sql(stmt)
-        val rows = df.limit(maxRows).collect()
-        val body =
-          if (df.columns.toSeq == Seq("svg") && rows.length == 1)
-            // a GRAFT PLOT ... RENDER relation: embed the chart
-            rows.head.getString(0)
-          else {
-            val head = df.columns
-              .map(c => s"<th>${hesc(c)}</th>").mkString
-            val data = rows.map { r =>
-              r.toSeq.map(v =>
-                s"<td>${hesc(if (v == null) "null" else v.toString)}</td>")
-                .mkString("<tr>", "", "</tr>")
-            }.mkString
-            s"<table><caption>${hesc(stmt)} — ${rows.length} " +
-              s"row(s)</caption><tr>$head</tr>$data</table>"
-          }
-        respondHtml(ex, 200, htmlPage("graft display", body))
-      } catch {
-        case e: Exception => respondHtml(ex, 400, htmlPage("graft error",
-          s"<p>error: ${hesc(Option(e.getMessage)
-            .getOrElse(e.getClass.getName).linesIterator
-            .take(3).mkString(" / "))}</p>"))
-      }
-    }
+  server.createContext("/display", (ex: HttpExchange) => {
+    val stmt = statement(ex)
+    if (stmt.isEmpty) respond(ex, 400, Html, htmlPage("graft",
+      "<p>pass a statement: GET /display?q=... or POST it</p>"))
+    else serve(ex, Html, stmt)((cols, rows) => htmlPage("graft display",
+      if (cols == Seq("svg") && rows.length == 1)
+        // a GRAFT PLOT ... RENDER relation: embed the chart
+        String.valueOf(rows.head.get(0))
+      else {
+        val head = cols.map(c => s"<th>${hesc(c)}</th>").mkString
+        val data = rows.map(_.toSeq
+          .map(v => s"<td>${hesc(String.valueOf(v))}</td>")
+          .mkString("<tr>", "", "</tr>")).mkString
+        s"<table><caption>${hesc(stmt)} — ${rows.length} " +
+          s"row(s)</caption><tr>$head</tr>$data</table>"
+      }), msg => htmlPage("graft error", s"<p>error: ${hesc(msg)}</p>"))
   })
 
   // ---- streaming / animated plot display (reference: modules/visual
@@ -175,26 +152,24 @@ class HttpService(spark: SparkSession, port: Int, maxRows: Int = 1000) {
   // StreamingPlot registry holds for that display — each browser poll
   // sees the newest micro-batch's complete SVG; ?frames=1 lists the
   // retained history (batch ids) instead.
-  server.createContext("/plot", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      val name = ex.getRequestURI.getPath.stripPrefix("/plot")
-        .stripPrefix("/")
-      val wantList = Option(ex.getRequestURI.getRawQuery)
-        .exists(_.contains("frames=1"))
-      graft.streaming.StreamingPlot.display(name) match {
-        case None => respondHtml(ex, 404, htmlPage("graft plot",
-          s"<p>no streaming display named '${hesc(name)}'</p>"))
-        case Some(d) if wantList =>
-          val items = d.frames
-            .map { case (id, _) => s"<li>batch $id</li>" }.mkString
-          respondHtml(ex, 200, htmlPage(s"frames: $name",
-            s"<ul>$items</ul>"))
-        case Some(d) => d.latest match {
-          case Some(svg) =>
-            respondHtml(ex, 200, htmlPage(s"plot: $name", svg))
-          case None => respondHtml(ex, 404, htmlPage("graft plot",
-            s"<p>display '${hesc(name)}' has no frames yet</p>"))
-        }
+  server.createContext("/plot", (ex: HttpExchange) => {
+    val name = ex.getRequestURI.getPath.stripPrefix("/plot")
+      .stripPrefix("/")
+    val wantList = Option(ex.getRequestURI.getRawQuery)
+      .exists(_.contains("frames=1"))
+    graft.streaming.StreamingPlot.display(name) match {
+      case None => respond(ex, 404, Html, htmlPage("graft plot",
+        s"<p>no streaming display named '${hesc(name)}'</p>"))
+      case Some(d) if wantList =>
+        val items = d.frames
+          .map { case (id, _) => s"<li>batch $id</li>" }.mkString
+        respond(ex, 200, Html, htmlPage(s"frames: $name",
+          s"<ul>$items</ul>"))
+      case Some(d) => d.latest match {
+        case Some(svg) =>
+          respond(ex, 200, Html, htmlPage(s"plot: $name", svg))
+        case None => respond(ex, 404, Html, htmlPage("graft plot",
+          s"<p>display '${hesc(name)}' has no frames yet</p>"))
       }
     }
   })

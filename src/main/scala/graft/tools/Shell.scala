@@ -3,13 +3,16 @@ package graft.tools
 import java.io.{BufferedReader, PrintWriter}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+
+import graft.service.{StatementError, StatementRunner}
 
 /** Interactive shell (reference: modules/interfaces/shell — Repl.scala,
   * ReplCommand.scala: SQL statements + meta commands over a line
   * reader). Spark-first re-expression: every statement — the full
   * Spark SQL surface plus the GRAFT dialect — goes through
-  * `spark.sql`, so the shell is a thin loop, not an engine. Meta
-  * commands mirror the reference's set:
+  * [[graft.service.StatementRunner]], so the shell is a thin loop that
+  * formats results, not an engine. Meta commands mirror the reference's:
   *
   *   \q                      quit
   *   \d | \tables            list temp views / tables
@@ -38,59 +41,44 @@ object Shell {
     var executed = 0
     val buf = new StringBuilder
 
-    def renderResult(df: org.apache.spark.sql.DataFrame): Unit = {
-      val rows = df.limit(MaxRows + 1).collect()
-      val shown = rows.take(MaxRows)
-      val names = df.columns
-      if (csv) {
-        out.println(names.mkString(","))
-        shown.foreach(r => out.println(
-          r.toSeq.map(v => if (v == null) "" else v.toString)
-            .mkString(",")))
-      } else {
-        val cells = shown.map(_.toSeq.map(v =>
-          if (v == null) "NULL" else v.toString))
+    def renderResult(r: StatementRunner.Result): Unit = {
+      val rows = r.rows.toArray
+      val names = r.schema.fieldNames.toSeq
+      val cells = rows.take(MaxRows).map(_.toSeq.map(v =>
+        if (v != null) v.toString else if (csv) "" else "NULL"))
+      if (csv) (names +: cells).foreach(c => out.println(c.mkString(",")))
+      else {
         val widths = names.indices.map(i =>
           (names(i).length +: cells.map(_(i).length)).max)
         def line(vals: Seq[String]) = out.println(
           vals.zip(widths).map { case (v, w) => v.padTo(w, ' ') }
             .mkString(" | "))
-        line(names.toSeq)
+        line(names)
         out.println(widths.map("-" * _).mkString("-+-"))
         cells.foreach(line)
       }
       out.println(
-        s"(${shown.length}${if (rows.length > MaxRows) "+" else ""} rows)")
+        s"(${cells.length}${if (rows.length > MaxRows) "+" else ""} rows)")
     }
 
     // the statement-level toggle (sclera: EXPLAIN SCRIPT [ON|OFF])
     val ExplainScriptRe =
       """(?is)\s*(?:GRAFT\s+)?EXPLAIN\s+SCRIPT(?:\s+(ON|OFF))?\s*""".r
 
-    def exec(stmt: String): Unit = {
-      stmt match {
-        case ExplainScriptRe(mode) =>
-          explainScript = mode == null || mode.equalsIgnoreCase("ON")
-          out.println(s"explain script ${if (explainScript) "on" else "off"}")
-          executed += 1
-          return
-        case _ => ()
-      }
-      val t0 = System.nanoTime()
-      try {
-        val df = spark.sql(stmt)
-        if (explainScript) out.println(
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode
-              .fromString("simple")))
-        renderResult(df)
+    def exec(stmt: String): Unit = stmt match {
+      case ExplainScriptRe(mode) =>
+        explainScript = mode == null || mode.equalsIgnoreCase("ON")
+        out.println(s"explain script ${if (explainScript) "on" else "off"}")
         executed += 1
-        if (timer) out.println(
-          f"time: ${(System.nanoTime() - t0) / 1e9}%.3fs")
+      case _ => try {
+        val r = StatementRunner.run(spark, stmt, Some(MaxRows + 1))
+        if (explainScript) out.println(
+          r.queryExecution.explainString(ExplainMode.fromString("simple")))
+        renderResult(r)
+        executed += 1
+        if (timer) out.println(f"time: ${r.elapsedMs / 1e3}%.3fs")
       } catch {
-        case e: Exception =>
-          out.println(s"error: ${Option(e.getMessage).getOrElse(e).toString
-            .linesIterator.take(3).mkString(" / ")}")
+        case e: StatementError => out.println(s"error: ${e.getMessage}")
       }
     }
 
@@ -99,17 +87,16 @@ object Shell {
       parts.head match {
         case "\\q" => return false
         case "\\d" | "\\tables" =>
-          spark.catalog.listTables().collect()
-            .map(_.name).sorted.foreach(out.println)
+          StatementRunner.run(spark, "SHOW TABLES").rows
+            .map(_.getAs[String]("tableName")).toSeq.sorted
+            .foreach(out.println)
         case "\\timer" => timer = parts.lift(1).contains("on")
         case "\\format" => csv = parts.lift(1).contains("csv")
         case "\\explain" =>
-          try out.println(
-            spark.sql(cmd.stripPrefix("\\explain").trim)
-              .queryExecution.explainString(
-                org.apache.spark.sql.execution.ExplainMode
-                  .fromString("formatted")))
-          catch { case e: Exception => out.println(s"error: ${e.getMessage}") }
+          try out.println(spark.sql(cmd.stripPrefix("\\explain").trim)
+            .queryExecution.explainString(ExplainMode.fromString("formatted")))
+          catch { case e: Exception =>
+            out.println(s"error: ${StatementRunner.message(e)}") }
         case "\\source" => parts.lift(1) match {
           case Some(f) if java.nio.file.Files.exists(
               java.nio.file.Paths.get(f)) =>

@@ -50,6 +50,12 @@ class HttpServiceSpec extends AnyFunSuite {
       val (c3, err) = http(port, "/sql", Some("SELECT * FROM nope"))
       assert(c3 == 400 && err.contains(""""error":"""))
 
+      // a task failure Spark names no error condition for is the
+      // engine's fault, not the statement's
+      val (c5, fault) = http(port, "/sql", Some("SELECT reflect(" +
+        "'java.lang.Integer', 'parseInt', concat('x', id)) FROM range(3)"))
+      assert(c5 == 500 && fault.contains(""""error":"""), fault)
+
       val (c4, _) = http(port, "/sql", None)
       assert(c4 == 405)
     } finally svc.stop()
