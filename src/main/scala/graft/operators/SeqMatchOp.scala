@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.lang.Double.compare
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -24,14 +26,15 @@ import org.apache.spark.sql.types._
   *
   * Match semantics: leftmost, non-overlapping, shortest (a match is
   * emitted as soon as the automaton accepts; scanning resumes at the
-  * next row). This is the streaming-friendly discipline — state is one
-  * NFA state-set per key, O(pattern) size.
+  * next row). This is the streaming-friendly discipline: the pattern
+  * compiles once, when the plan is built, into a DFA ([[compileDfa]]),
+  * and one kernel ([[Matcher]]) steps it for the batch matchers and
+  * for graft.streaming.StreamingMatch alike. A key's state is one DFA
+  * state, its run's path and O(labels) folded aggregates.
   *
   * Scale shape: repartition by key + sortWithinPartitions, then a
-  * single mapPartitions pass runs the automaton across key runs —
-  * no per-group materialization, state bounded per key, works
-  * identically under Structured Streaming's
-  * flatMapGroupsWithState if fed incrementally.
+  * single mapPartitions pass runs the kernel across key runs — no
+  * per-group materialization, state bounded per key.
   */
 object SeqMatchOp {
 
@@ -45,73 +48,64 @@ object SeqMatchOp {
   private case class Plus(a: Ast) extends Ast
   private case class Opt(a: Ast) extends Ast
 
-  /** a{n,m}: n required copies then m-n optional copies (language
-    * equality is all the NFA needs; shortest-match semantics are
-    * unaffected by the expansion shape). */
-  private def repeat(a: Ast, n: Int, m: Int): Ast = {
-    require(n >= 0 && m >= n && m >= 1, s"bad bounds {$n,$m}")
-    val parts = List.fill(n)(a) ++ List.fill(m - n)(Opt(a))
-    parts.reduce(Cat)
-  }
+  private val Token = """[()|*+?{},]|[^\s()|*+?{},]+""".r
 
+  /** Parse a pattern; a malformed one fails with an
+    * IllegalArgumentException naming the pattern and the position (a
+    * 0-based character offset) of the offending token. */
   private def parse(pattern: String): Ast = {
-    val toks = pattern
-      .replace("(", " ( ").replace(")", " ) ").replace("|", " | ")
-      .replace("*", " * ").replace("+", " + ").replace("?", " ? ")
-      .replace("{", " { ").replace("}", " } ").replace(",", " , ")
-      .trim.split("\\s+").filter(_.nonEmpty).toList
-    var rest = toks
-    def peek: Option[String] = rest.headOption
-    def next(): String = { val h = rest.head; rest = rest.tail; h }
+    val toks = Token.findAllMatchIn(pattern).toVector
+    var i = 0
+    def peek: Option[String] = toks.lift(i).map(_.matched)
+    def eat(t: String): Boolean = peek.contains(t) && { i += 1; true }
+    def fail(expected: String): Nothing = throw new IllegalArgumentException(
+      s"MATCH pattern '$pattern': expected $expected at pos " +
+        toks.lift(i).fold(s"${pattern.length}, found the end of the pattern")(
+          t => s"${t.start}, found '${t.matched}'"))
+    def expect(t: String): Unit = if (!eat(t)) fail(s"'$t'")
+    def count(): Int = peek.flatMap(_.toIntOption).filter(_ >= 0)
+      .map { n => i += 1; n }.getOrElse(fail("a count"))
     def parseAlt(): Ast = {
       var a = parseCat()
-      while (peek.contains("|")) { next(); a = Alt(a, parseCat()) }
+      while (eat("|")) a = Alt(a, parseCat())
       a
     }
     def parseCat(): Ast = {
       var a = parsePostfix()
-      while (peek.exists(t => t != "|" && t != ")")) {
+      while (peek.exists(t => t != "|" && t != ")" && t != ","))
         a = Cat(a, parsePostfix())
-      }
       a
     }
     def parsePostfix(): Ast = {
       var a = parseAtom()
       var done = false
-      while (!done) peek match {
-        case Some("*") => next(); a = Star(a)
-        case Some("+") => next(); a = Plus(a)
-        case Some("?") => next(); a = Opt(a)
-        case Some("{") =>
-          next()
-          val n = next().toInt
-          val m = peek match {
-            case Some(",") => next(); next().toInt
-            case _ => n
-          }
-          require(next() == "}", s"unclosed {} in pattern: $pattern")
-          a = repeat(a, n, m)
-        case _ => done = true
-      }
+      while (!done)
+        if (eat("*")) a = Star(a)
+        else if (eat("+")) a = Plus(a)
+        else if (eat("?")) a = Opt(a)
+        else if (eat("{")) {
+          // a{n,m}: n required copies then m-n optional copies
+          val n = count()
+          val m = if (eat(",")) count() else n
+          if (m < n || m < 1) fail("bounds with n <= m and m >= 1")
+          expect("}")
+          a = (List.fill(n)(a) ++ List.fill(m - n)(Opt(a))).reduce(Cat)
+        } else done = true
       a
     }
-    def parseAtom(): Ast = next() match {
-      case "(" =>
-        val a = parseAlt()
-        require(next() == ")", s"unbalanced parens in pattern: $pattern")
-        a
-      case "PERMUTE" =>
-        require(next() == "(", s"PERMUTE needs (...) in pattern: $pattern")
+    def parseAtom(): Ast =
+      if (eat("(")) { val a = parseAlt(); expect(")"); a }
+      else if (eat("PERMUTE")) {
+        expect("(")
         val parts = mutable.Buffer(parsePostfix())
-        while (peek.contains(",")) { next(); parts += parsePostfix() }
-        require(next() == ")", s"unbalanced PERMUTE in pattern: $pattern")
-        require(parts.size <= 6, "PERMUTE supports at most 6 elements")
-        parts.toList.permutations
-          .map(_.reduce(Cat)).reduce[Ast](Alt(_, _))
-      case sym => Sym(sym)
-    }
+        while (eat(",")) parts += parsePostfix()
+        if (parts.size > 6) fail("at most 6 PERMUTE elements")
+        expect(")")
+        parts.toList.permutations.map(_.reduce(Cat)).reduce[Ast](Alt(_, _))
+      } else peek.filterNot(_.exists("()|*+?{},".contains(_)))
+        .map { t => i += 1; Sym(t) }.getOrElse(fail("a label or '('"))
     val ast = parseAlt()
-    require(rest.isEmpty, s"trailing tokens in pattern: $pattern")
+    if (i < toks.length) fail("an operator or a label")
     ast
   }
 
@@ -136,6 +130,8 @@ object SeqMatchOp {
       closure(states.flatMap(s => trans.getOrElse((s, label), Set.empty)))
     def initial: Set[Int] = closure(Set(start))
     def accepts(states: Set[Int]): Boolean = states.contains(accept)
+    /** The label alphabet, sorted. */
+    def labels: Vector[String] = trans.keys.map(_._2).toVector.distinct.sorted
   }
 
   def compile(pattern: String): Nfa = {
@@ -174,25 +170,44 @@ object SeqMatchOp {
     new Nfa(trans.toMap, eps.toMap, s, e)
   }
 
+  /** The pattern's labels, sorted: the DFA's label ids and the order of
+    * the per-label aggregate columns. */
+  def labels(pattern: String): Vector[String] = compile(pattern).labels
+
   /** DFA over the pattern's label ids. State 0 is the NFA's initial
     * state set and -1 is dead: no run can continue, as with an empty
-    * NFA state set. A label outside the pattern always leads to -1. */
-  final class Dfa(labelIds: Map[String, Int], next: Array[Array[Int]],
+    * NFA state set. A label outside the pattern has id -1 and always
+    * leads to -1. State ids follow a fixed breadth-first order, so a
+    * checkpointed state stays valid for the same pattern. */
+  final class Dfa(val labels: Vector[String], next: Array[Array[Int]],
       accepting: Array[Boolean]) extends Serializable {
-    def step(state: Int, label: String): Int =
-      labelIds.get(label).fold(-1)(next(state)(_))
+    private val ids = labels.zipWithIndex.toMap
+    def label(l: String): Int = ids.getOrElse(l, -1)
+    def step(state: Int, label: Int): Int =
+      if (label < 0) -1 else next(state)(label)
     def accepts(state: Int): Boolean = accepting(state)
+    def size: Int = next.length
   }
 
+  private final val MaxDfaStates = 10000
+
   /** Subset construction over [[compile]]'s NFA: each reachable state
-    * set becomes one DFA state. */
+    * set becomes one DFA state. Every MATCH entry point compiles its
+    * pattern here, once, when the plan is built, which rejects a
+    * pattern that accepts the empty sequence: it would "match" before
+    * any row, and the kernel has no run to emit. It is eager, so
+    * checkpointed state ids stay fixed, and a DFA past [[MaxDfaStates]]
+    * (`(a|b)* a (a|b){n}` has 2^(n+1) + 1) fails before it fills the
+    * heap. */
   def compileDfa(pattern: String): Dfa = {
     val nfa = compile(pattern)
-    val labels = nfa.trans.keys.map(_._2).toVector.distinct.sorted
+    val labels = nfa.labels
     val sets = mutable.ArrayBuffer(nfa.initial)
     val ids = mutable.HashMap(nfa.initial -> 0)
     val next = mutable.ArrayBuffer.empty[Array[Int]]
     while (next.length < sets.length) {
+      if (sets.length > MaxDfaStates) throw new IllegalArgumentException(
+        s"MATCH pattern '$pattern': more than $MaxDfaStates DFA states")
       val from = sets(next.length)
       next += labels.map { l =>
         val to = nfa.step(from, l)
@@ -200,18 +215,117 @@ object SeqMatchOp {
         else ids.getOrElseUpdate(to, { sets += to; sets.length - 1 })
       }.toArray
     }
-    new Dfa(labels.zipWithIndex.toMap, next.toArray,
-      sets.map(nfa.accepts).toArray)
+    val dfa = new Dfa(labels, next.toArray, sets.map(nfa.accepts).toArray)
+    require(!dfa.accepts(0),
+      s"MATCH pattern accepts the empty sequence: $pattern")
+    dfa
   }
 
-  /** Reject, on the driver, a pattern that accepts the empty sequence:
-    * it would "match" before any row, and the matchers have no run to
-    * emit. Every MATCH entry point (both batch matchers and
-    * StreamingMatch) calls this before planning. */
-  def requireNonEmptyMatch(pattern: String): Unit = {
-    val nfa = compile(pattern)
-    require(!nfa.accepts(nfa.initial),
-      s"MATCH pattern accepts the empty sequence: $pattern")
+  /** The MATCH kernel: steps one key's ordered rows at a time through
+    * the DFA ([[newKey]] between keys). On a dead step the run is
+    * dropped and the same row retried from state 0; on accept the run
+    * goes to `emit` and restarts.
+    *
+    * A row is a symbol: a label id, or a label set ([[symbol]] of a
+    * Seq) that steps on all its labels at once. Sets reach unions of
+    * DFA states, numbered per pass after the DFA's own, with each
+    * (state, symbol) edge cached when first taken: NFA steps distribute
+    * over a union, so a union steps as its members do and accepts if
+    * one does. The path records the first label in set order whose own
+    * step is not dead.
+    *
+    * Each label's count, sum, min and max and the run's argmax row
+    * (strictly greater: the earliest row wins ties) fold as the run
+    * grows, sums in run order: a run holds O(labels) values and its
+    * path, never its rows. */
+  final class Matcher(dfa: Dfa)(emit: Matcher => Unit) {
+    var state = 0
+    var n = 0
+    var first: Any = _
+    var last: Any = _
+    val path = new StringBuilder
+    var matchId = 0L
+    private val k = dfa.labels.length
+    val count = new Array[Int](k)
+    val sum, min, max = new Array[Double](k)
+    var argOrd: Any = _
+    var argLabel = -1
+    var argValue = 0.0
+
+    // label-set symbols and the unions they reach; lazy, so a pass of
+    // single labels (every stream key in every batch) allocates none
+    private lazy val symbols = mutable.HashMap.empty[Seq[String], Int]
+    private lazy val sets = mutable.ArrayBuffer.empty[Seq[Int]]
+    private lazy val unions = mutable.HashMap.empty[Seq[Int], Int]
+    private lazy val members = mutable.ArrayBuffer.empty[Seq[Int]]
+    private lazy val edges = mutable.HashMap.empty[Long, Long]
+
+    def symbol(label: String): Int = dfa.label(label)
+
+    def symbol(labels: Seq[String]): Int = symbols.getOrElse(labels, {
+      val ids = labels.map(dfa.label).filter(_ >= 0)
+      val sym = if (ids.length < 2) ids.headOption.getOrElse(-1)
+        else { sets += ids; k + sets.length - 1 }
+      symbols(labels.toVector) = sym
+      sym
+    })
+
+    def newKey(): Unit = { matchId = 0L; restart() }
+
+    def restart(): Unit = {
+      state = 0; n = 0; path.setLength(0)
+      java.util.Arrays.fill(count, 0)
+    }
+
+    private def states(s: Int): Seq[Int] =
+      if (s < dfa.size) Seq(s) else members(s - dfa.size)
+
+    private def accepts(s: Int): Boolean =
+      if (s < dfa.size) dfa.accepts(s) else states(s).exists(dfa.accepts)
+
+    def feed(ord: Any, sym: Int, value: Double): Unit = {
+      var e = edge(state, sym)
+      if (e < 0) { restart(); e = edge(0, sym) }
+      if (e >= 0) {
+        val l = e.toInt
+        if (n == 0) first = ord else path ++= "->"
+        path ++= dfa.labels(l)
+        last = ord
+        val c = count(l)
+        count(l) += 1
+        sum(l) = if (c == 0) value else sum(l) + value
+        // java.lang.Double.compare orders like Seq.min and Seq.max
+        if (c == 0 || compare(value, min(l)) < 0) min(l) = value
+        if (c == 0 || compare(value, max(l)) > 0) max(l) = value
+        if (n == 0 || value > argValue) {
+          argOrd = ord; argLabel = l; argValue = value
+        }
+        n += 1
+        state = (e >>> 32).toInt
+      }
+      if (accepts(state)) { matchId += 1; emit(this); restart() }
+    }
+
+    /** The edge from `from` on `sym`: the next state in the high half
+      * and the recorded label id in the low half, or -1 when dead. */
+    private def edge(from: Int, sym: Int): Long =
+      if (sym < 0) -1L
+      else if (from < dfa.size && sym < k) {
+        val to = dfa.step(from, sym)
+        if (to < 0) -1L else (to.toLong << 32) | sym
+      } else edges.getOrElseUpdate((from.toLong << 32) | sym, {
+        val steps = (if (sym < k) Seq(sym) else sets(sym - k))
+          .map(l => l -> states(from).map(dfa.step(_, l)).filter(_ >= 0))
+          .filter(_._2.nonEmpty)
+        if (steps.isEmpty) -1L
+        else {
+          val to = steps.flatMap(_._2).distinct.sorted
+          val id = if (to.size == 1) to.head
+            else unions.getOrElseUpdate(to, {
+              members += to; dfa.size + members.length - 1 })
+          (id.toLong << 32) | steps.head._1
+        }
+      })
   }
 
   // ---- The relational operator ----
@@ -260,208 +374,112 @@ object SeqMatchOp {
       df: DataFrame, keyCol: String, ordCol: String, labelCol: String,
       pattern: String, valueCol: Option[String] = None,
       rich: Boolean = false, arg: Boolean = false): DataFrame = {
-    requireNonEmptyMatch(pattern)
-    val spark = df.sparkSession
-    val ordType = df.schema(ordCol).dataType
-    val labels = pattern.split("[()|*+?\\s]+").filter(_.nonEmpty)
-      .distinct.sorted.toSeq
-    val aggFields = valueCol match {
-      case None => Seq.empty
-      case Some(_) =>
-        labels.flatMap { l =>
-          Seq(StructField(s"n_$l", IntegerType),
-            StructField(s"sum_$l", DoubleType)) ++
-          (if (rich) Seq(
-            StructField(s"min_$l", DoubleType, nullable = true),
-            StructField(s"max_$l", DoubleType, nullable = true),
-            StructField(s"avg_$l", DoubleType, nullable = true))
-          else Seq.empty)
-        }
+    val dfa = compileDfa(pattern)
+    valueCol.foreach { v =>
+      val t = df.schema(v).dataType
+      require(t.isInstanceOf[NumericType],
+        s"MATCH VALUE column '$v' has type ${t.sql}; it must be numeric")
     }
+    val labels = dfa.labels
+    val withValue = valueCol.isDefined
+    val withArg = arg && withValue
+    val aggFields =
+      if (!withValue) Seq.empty
+      else labels.flatMap { l =>
+        Seq(StructField(s"n_$l", IntegerType),
+          StructField(s"sum_$l", DoubleType)) ++
+        (if (rich) Seq(
+          StructField(s"min_$l", DoubleType, nullable = true),
+          StructField(s"max_$l", DoubleType, nullable = true),
+          StructField(s"avg_$l", DoubleType, nullable = true))
+        else Seq.empty)
+      }
     val argFields =
-      if (!arg || valueCol.isEmpty) Seq.empty
+      if (!withArg) Seq.empty
       else Seq(StructField("argmax_ord", df.schema(ordCol).dataType),
         StructField("argmax_label", StringType),
         StructField("argmax_value", DoubleType))
-    val outSchema = StructType(Seq(
-      StructField(keyCol, LongType),
-      StructField("match_id", LongType),
-      StructField("n_rows", IntegerType),
-      StructField("first_ord", ordType),
-      StructField("last_ord", ordType),
-      StructField("path", StringType)) ++ aggFields ++ argFields)
-    val baseCols = Seq(col(keyCol).cast("long").as(keyCol), col(ordCol),
-      col(labelCol).cast("string").as(labelCol))
-    val selected = valueCol match {
-      case None => baseCols
-      case Some(v) => baseCols :+ col(v).cast("double").as(v)
-    }
-    val sorted = df.select(selected: _*)
-      .repartition(col(keyCol))
-      .sortWithinPartitions(col(keyCol), col(ordCol))
-    val withValue = valueCol.isDefined
-    val withArg = arg && valueCol.isDefined
-    val enc = RowEncoder.encoderFor(outSchema)
-    sorted.mapPartitions { rows =>
-      val nfa = compile(pattern)
-      new Iterator[Row] {
-        private var curKey: Long = -1L
-        private var matchId: Long = 0L
-        private var states = nfa.initial
-        private var runRows = mutable.ArrayBuffer.empty[(Any, String, Double)]
-        private val pending = mutable.Queue.empty[Row]
-        private def restart(): Unit = {
-          states = nfa.initial; runRows.clear()
-        }
-        private def emit(): Unit = {
-          matchId += 1
-          val base = Seq(
-            curKey, matchId, runRows.length,
-            runRows.head._1, runRows.last._1,
-            runRows.map(_._2).mkString("->"))
-          val aggs =
-            if (!withValue) Seq.empty
-            else labels.flatMap { l =>
-              val hits = runRows.filter(_._2 == l)
-              val s = hits.map(_._3).sum // run-ordered fold
-              Seq[Any](hits.length, s) ++
-                (if (!rich) Seq.empty
-                else if (hits.isEmpty) Seq[Any](null, null, null)
-                else Seq[Any](hits.map(_._3).min, hits.map(_._3).max,
-                  s / hits.length))
-            }
-          val argOut =
-            if (!withArg) Seq.empty
-            else {
-              // argmax row: strictly-greater scan => earliest matched
-              // row wins ties (the reference's running-arg semantics)
-              var bi = 0
-              var i = 1
-              while (i < runRows.length) {
-                if (runRows(i)._3 > runRows(bi)._3) bi = i
-                i += 1
-              }
-              Seq[Any](runRows(bi)._1, runRows(bi)._2, runRows(bi)._3)
-            }
-          pending.enqueue(Row.fromSeq(base ++ aggs ++ argOut))
-        }
-        private def feed(r: Row): Unit = {
-          val k = r.getLong(0)
-          if (k != curKey) { curKey = k; matchId = 0L; restart() }
-          val ord = r.get(1)
-          val label = r.getString(2)
-          val v = if (withValue && !r.isNullAt(3)) r.getDouble(3) else 0.0
-          val nxt = nfa.step(states, label)
-          if (nxt.isEmpty) {
-            // dead: drop the current run, retry this row as a fresh start
-            restart()
-            val retry = nfa.step(states, label)
-            if (retry.nonEmpty) { states = retry; runRows += ((ord, label, v)) }
-          } else {
-            states = nxt
-            runRows += ((ord, label, v))
-          }
-          if (nfa.accepts(states)) { emit(); restart() }
-        }
-        override def hasNext: Boolean = {
-          while (pending.isEmpty && rows.hasNext) feed(rows.next())
-          pending.nonEmpty
-        }
-        override def next(): Row = pending.dequeue()
+    val selected = Seq(col(keyCol).cast("long").as(keyCol), col(ordCol),
+      col(labelCol).cast("string").as(labelCol)) ++
+      valueCol.map(v => col(v).cast("double").as(v))
+    scan(df.select(selected: _*), keyCol, ordCol, dfa,
+        aggFields ++ argFields) { (m, r) =>
+      m.feed(r.get(1), m.symbol(r.getString(2)),
+        if (withValue && !r.isNullAt(3)) r.getDouble(3) else 0.0)
+    } { m =>
+      val aggs = if (!withValue) Seq.empty else labels.indices.flatMap { l =>
+        val c = m.count(l)
+        val s = if (c == 0) 0.0 else m.sum(l)
+        Seq[Any](c, s) ++
+          (if (!rich) Seq.empty
+          else if (c == 0) Seq[Any](null, null, null)
+          else Seq[Any](m.min(l), m.max(l), s / c))
       }
-    }(enc)
+      if (withArg) aggs ++ Seq(m.argOrd, labels(m.argLabel), m.argValue)
+      else aggs
+    }
   }
 
   /** Multi-label MATCH (reference analytics/sequence/labeler/
     * rowlabeler/ColumnRowLabeler.scala:29-44 — labels read from an
     * input column through a WHEN/THEN value mapping, with multi-label
     * rows and wildcard labels): each row carries a label SET
-    * (`labelsCol`, array&lt;string&gt;), and the Thompson NFA steps on
-    * the UNION of the per-label transitions — a row with labels
-    * {purchase, any} advances both a branch expecting `purchase` and
-    * one expecting `any`. The label recorded in `path` is the first
-    * label in array order that individually advanced the state set
-    * (array order = statement order: the WHEN/ELSE-mapped label
-    * before the ALSO wildcard), which keeps the emitted path
-    * deterministic. Same leftmost / shortest / non-overlapping
-    * semantics and the same one-pass repartition+sort shape as
-    * [[matchPattern]]. */
+    * (`labelsCol`, array&lt;string&gt;) and steps the kernel on all
+    * its labels at once — a row with labels {purchase, any} advances
+    * both a branch expecting `purchase` and one expecting `any`. The
+    * label recorded in `path` is the first label in array order whose
+    * own step is not dead (array order = statement order: the
+    * WHEN/ELSE-mapped label before the ALSO wildcard), which keeps the
+    * emitted path deterministic. Same leftmost / shortest /
+    * non-overlapping semantics and the same one-pass repartition+sort
+    * shape as [[matchPattern]]. */
   def matchPatternMulti(
       df: DataFrame, keyCol: String, ordCol: String, labelsCol: String,
       pattern: String): DataFrame = {
-    requireNonEmptyMatch(pattern)
-    val ordType = df.schema(ordCol).dataType
-    val outSchema = StructType(Seq(
+    val dfa = compileDfa(pattern)
+    scan(df.select(col(keyCol).cast("long").as(keyCol), col(ordCol),
+        col(labelsCol).cast("array<string>").as(labelsCol)),
+        keyCol, ordCol, dfa, Seq.empty) { (m, r) =>
+      m.feed(r.get(1),
+        m.symbol(if (r.isNullAt(2)) Seq.empty[String] else r.getSeq[String](2)),
+        0.0)
+    }(_ => Seq.empty)
+  }
+
+  /** One kernel pass per partition over `rows` (key, ord, label…),
+    * repartitioned by key and sorted by (key, ord): `feed` steps a row,
+    * and each match becomes a row of key, match_id, n_rows, first_ord,
+    * last_ord, path and `extra`'s values for `extraFields`. */
+  private def scan(rows: DataFrame, keyCol: String, ordCol: String,
+      dfa: Dfa, extraFields: Seq[StructField])(
+      feed: (Matcher, Row) => Unit)(extra: Matcher => Seq[Any]): DataFrame = {
+    val ordType = rows.schema(ordCol).dataType
+    val schema = StructType(Seq(
       StructField(keyCol, LongType),
       StructField("match_id", LongType),
       StructField("n_rows", IntegerType),
       StructField("first_ord", ordType),
       StructField("last_ord", ordType),
-      StructField("path", StringType)))
-    val sorted = df
-      .select(col(keyCol).cast("long").as(keyCol), col(ordCol),
-        col(labelsCol).cast("array<string>").as(labelsCol))
-      .repartition(col(keyCol))
+      StructField("path", StringType)) ++ extraFields)
+    rows.repartition(col(keyCol))
       .sortWithinPartitions(col(keyCol), col(ordCol))
-    val enc = RowEncoder.encoderFor(outSchema)
-    sorted.mapPartitions { rows =>
-      val nfa = compile(pattern)
-      new Iterator[Row] {
-        private var curKey: Long = -1L
-        private var matchId: Long = 0L
-        private var states = nfa.initial
-        private var runRows = mutable.ArrayBuffer.empty[(Any, String)]
-        private val pending = mutable.Queue.empty[Row]
-        private def restart(): Unit = {
-          states = nfa.initial; runRows.clear()
-        }
-        private def emit(): Unit = {
-          matchId += 1
-          pending.enqueue(Row.fromSeq(Seq(
-            curKey, matchId, runRows.length,
-            runRows.head._1, runRows.last._1,
-            runRows.map(_._2).mkString("->"))))
-        }
-        /** Union step over the row's label set; also returns the
-          * first label (in array order) that advanced on its own. */
-        private def stepAll(from: Set[Int],
-            ls: Seq[String]): (Set[Int], String) = {
-          var union = Set.empty[Int]
-          var recorded: String = null
-          ls.foreach { l =>
-            val s = nfa.step(from, l)
-            if (s.nonEmpty) {
-              if (recorded == null) recorded = l
-              union ++= s
+      .mapPartitions { it =>
+        val pending = mutable.Queue.empty[Row]
+        var key = -1L
+        val m = new Matcher(dfa)(m => pending.enqueue(Row.fromSeq(
+          Seq(key, m.matchId, m.n, m.first, m.last, m.path.toString) ++
+            extra(m))))
+        new Iterator[Row] {
+          override def hasNext: Boolean = {
+            while (pending.isEmpty && it.hasNext) {
+              val r = it.next()
+              if (r.getLong(0) != key) { key = r.getLong(0); m.newKey() }
+              feed(m, r)
             }
+            pending.nonEmpty
           }
-          (union, recorded)
+          override def next(): Row = pending.dequeue()
         }
-        private def feed(r: Row): Unit = {
-          val k = r.getLong(0)
-          if (k != curKey) { curKey = k; matchId = 0L; restart() }
-          val ord = r.get(1)
-          val ls: Seq[String] =
-            if (r.isNullAt(2)) Seq.empty else r.getSeq[String](2)
-          val (nxt, rec) = stepAll(states, ls)
-          if (nxt.isEmpty) {
-            restart()
-            val (retry, rec2) = stepAll(states, ls)
-            if (retry.nonEmpty) {
-              states = retry; runRows += ((ord, rec2))
-            }
-          } else {
-            states = nxt
-            runRows += ((ord, rec))
-          }
-          if (nfa.accepts(states)) { emit(); restart() }
-        }
-        override def hasNext: Boolean = {
-          while (pending.isEmpty && rows.hasNext) feed(rows.next())
-          pending.nonEmpty
-        }
-        override def next(): Row = pending.dequeue()
-      }
-    }(enc)
+      }(RowEncoder.encoderFor(schema))
   }
 }

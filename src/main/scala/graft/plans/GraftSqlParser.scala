@@ -244,7 +244,7 @@ object GraftSqlParser {
     // rowlabeler/ColumnRowLabeler.scala:29-44): LABEL BY maps the
     // column's values to pattern labels, ELSE labels unmapped values,
     // and ALSO attaches a wildcard label to EVERY row — multi-label
-    // rows feeding the same Thompson NFA. ALL matching WHEN arms
+    // rows stepping the same MATCH kernel. ALL matching WHEN arms
     // contribute (the same value may map to several labels); ELSE
     // applies only when NO arm matched; with no mapping at all the
     // column value itself is the label.
@@ -297,8 +297,7 @@ object GraftSqlParser {
           require(value != null, "GRAFT MATCH PIVOT requires VALUE <col>")
           val aggU = pivotAgg.toUpperCase
           val rich = Set("MIN", "MAX", "AVG")(aggU)
-          val inPattern = pattern.split("[()|*+?\\s]+")
-            .filter(_.nonEmpty).toSet
+          val inPattern = SeqMatchOp.labels(pattern).toSet
           val ls = csv(pivotLabels)
           ls.foreach(l => require(inPattern(l),
             s"GRAFT MATCH PIVOT: label '$l' not in pattern '$pattern'"))

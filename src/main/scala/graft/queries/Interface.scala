@@ -1475,7 +1475,7 @@ object Interface {
     // MATCH labels from a column (reference ColumnRowLabeler:29-44):
     // LABEL BY maps event_type values to pattern labels and ALSO
     // attaches the wildcard label `any` to EVERY row — multi-label
-    // rows feeding the same Thompson NFA (a purchase row carries
+    // rows stepping the same MATCH kernel (a purchase row carries
     // {purchase, any} and can serve as either). Pattern `purchase
     // any` pairs each purchase with its immediately following event
     // (whatever it is), leftmost non-overlapping — the oracle is the
@@ -1494,7 +1494,7 @@ object Interface {
         .orderBy(col("user_id"))
     },
 
-    // Full regex row-sequence MATCH (Thompson NFA over per-user ordered
+    // Full regex row-sequence MATCH (a DFA over per-user ordered
     // event labels): click (view)* purchase — reference analytics/
     // sequence/matcher semantics, leftmost-shortest non-overlapping.
     "q62_seq_match_regex" -> { (spark, dir) =>
@@ -1508,7 +1508,7 @@ object Interface {
         .orderBy(col("user_id"))
     },
 
-    // Bounded quantifier (MATCH_RECOGNIZE {n,m} parity): same NFA,
+    // Bounded quantifier (MATCH_RECOGNIZE {n,m} parity): same matcher,
     // pattern `click view{1,2} purchase`; oracle = the q62 window-SQL
     // derivation restricted to runs of 1-2 views.
     "q109_match_bounded" -> { (spark, dir) =>

@@ -305,7 +305,7 @@ object StreamingOracle {
         .orderBy(col("h"), col("dup_doc"))
     },
 
-    // Streaming row-sequence regex MATCH: the Thompson-NFA matcher
+    // Streaming row-sequence regex MATCH: the batch operator's DFA kernel
     // under flatMapGroupsWithState, drained over the whole corpus —
     // identical leftmost/non-overlapping/shortest semantics to the
     // batch operator, so the oracle is the same window-SQL match

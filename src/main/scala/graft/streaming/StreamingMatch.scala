@@ -32,12 +32,12 @@ case class StreamMatchOut(
   * sclera evaluates the matcher over unbounded ordered streams; here
   * it runs under flatMapGroupsWithState).
   *
-  * The pattern is compiled once per query into a DFA
-  * ([[SeqMatchOp.compileDfa]], subset construction over the batch
-  * operator's Thompson NFA), so a key steps one `Int` per event and
-  * its state is the flat [[MatchKeyState]]. MATCH checkpoints written
-  * with the earlier state schema (NFA state sets and buffered run
-  * rows) cannot be restored; such queries restart from a new
+  * The pattern is compiled once per query into the batch operator's
+  * DFA ([[SeqMatchOp.compileDfa]]), and each key's events step the
+  * same kernel ([[SeqMatchOp.Matcher]]) the batch matchers use, resumed
+  * from and saved to the flat [[MatchKeyState]]. MATCH checkpoints
+  * written with the earlier state schema (NFA state sets and buffered
+  * run rows) cannot be restored; such queries restart from a new
   * checkpoint.
   *
   * Semantics are identical to the batch operator (leftmost,
@@ -56,16 +56,16 @@ object StreamingMatch {
   private def micros(t: Timestamp): Long =
     t.getTime / 1000 * 1000000L + t.getNanos / 1000
 
-  private def toTs(m: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(m, 1000000L) * 1000)
-    t.setNanos((Math.floorMod(m, 1000000L) * 1000).toInt)
+  private def toTs(m: Any): Timestamp = {
+    val us = m.asInstanceOf[Long]
+    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000)
+    t.setNanos((Math.floorMod(us, 1000000L) * 1000).toInt)
     t
   }
 
   def matches(events: DataFrame, pattern: String): Dataset[StreamMatchOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    SeqMatchOp.requireNonEmptyMatch(pattern)
     val dfa = SeqMatchOp.compileDfa(pattern)
     events
       .select(col("user_id").cast("long").as("user_id"), col("ts"),
@@ -79,41 +79,18 @@ object StreamingMatch {
   private def process(dfa: SeqMatchOp.Dfa)(
       key: Long, it: Iterator[MatchEvent],
       gs: GroupState[MatchKeyState]): Iterator[StreamMatchOut] = {
-    val st = gs.getOption.getOrElse(MatchKeyState(0, 0, 0L, 0L, "", 0L))
-    var state = st.dfaState
-    var n = st.n
-    var firstOrd = st.firstOrd
-    var lastOrd = st.lastOrd
-    val path = new StringBuilder(st.path)
-    var matchId = st.matchId
     val out = Vector.newBuilder[StreamMatchOut]
-
-    def restart(): Unit = { state = 0; n = 0; path.clear() }
-
-    val ordered = it.toVector.sortBy(e => (micros(e.ts), e.event_id))
-    for (e <- ordered) {
-      val label = e.event_type
-      var next = dfa.step(state, label)
-      // dead: drop the current run, retry this row as a fresh start
-      if (next < 0) { restart(); next = dfa.step(0, label) }
-      if (next >= 0) {
-        val ord = micros(e.ts)
-        if (n == 0) firstOrd = ord else path ++= "->"
-        path ++= label
-        lastOrd = ord
-        n += 1
-        state = next
-      }
-      if (dfa.accepts(state)) {
-        matchId += 1
-        out += StreamMatchOut(key, matchId, n, toTs(firstOrd),
-          toTs(lastOrd), path.toString)
-        restart()
-      }
+    val m = new SeqMatchOp.Matcher(dfa)(m =>
+      out += StreamMatchOut(key, m.matchId, m.n, toTs(m.first),
+        toTs(m.last), m.path.toString))
+    gs.getOption.foreach { st =>
+      m.state = st.dfaState; m.n = st.n; m.first = st.firstOrd
+      m.last = st.lastOrd; m.path ++= st.path; m.matchId = st.matchId
     }
-
-    gs.update(
-      MatchKeyState(state, n, firstOrd, lastOrd, path.toString, matchId))
+    it.toVector.sortBy(e => (micros(e.ts), e.event_id))
+      .foreach(e => m.feed(micros(e.ts), m.symbol(e.event_type), 0.0))
+    gs.update(MatchKeyState(m.state, m.n, m.first.asInstanceOf[Long],
+      m.last.asInstanceOf[Long], m.path.toString, m.matchId))
     out.result().iterator
   }
 }

@@ -83,6 +83,23 @@ class ParserRobustnessSpec extends AnyFunSuite {
       spark.sql("graft frobnicate x").collect()
     }
     assert(unknown.getMessage.contains("FROBNICATE"), unknown.getMessage)
+    // a malformed MATCH pattern fails before any job runs, naming the
+    // pattern and the position, so does one whose DFA is too large,
+    // and the runner reports both as user errors
+    Seq("click (view purchase" -> "expected ')' at pos 20",
+        "a{x}" -> "expected a count at pos 2, found 'x'",
+        "a | * b" -> "expected a label or '(' at pos 4",
+        "( a | b )* a ( a | b ){13}" -> "more than 10000 DFA states").foreach {
+      case (pattern, where) =>
+        val e = intercept[IllegalArgumentException] {
+          spark.sql(s"GRAFT MATCH '$pattern' ON events KEY user_id " +
+            "ORDER ts LABEL event_type").collect()
+        }
+        assert(e.getMessage.contains(s"MATCH pattern '$pattern'") &&
+          e.getMessage.contains(where), e.getMessage)
+        assert(graft.service.StatementRunner.error(e).kind ==
+          graft.service.StatementError.User)
+    }
   }
 
   test("GRAFT CHECK evaluates named rules in one statement") {

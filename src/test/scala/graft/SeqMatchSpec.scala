@@ -178,4 +178,47 @@ class SeqMatchSpec extends AnyFunSuite {
     // x rows break the run: a(2) dies at x(3), no match
     assert(out.isEmpty)
   }
+
+  test("aggregate columns come from the parsed pattern's labels") {
+    val rows = Seq((1L, 1, "click", 1.0), (1L, 2, "view", 2.0),
+      (1L, 3, "view", 3.0), (1L, 4, "purchase", 4.0),
+      (1L, 5, "purchase", 5.0), (1L, 6, "click", 6.0))
+      .toDF("k", "ord", "lab", "v")
+    val base = Seq("k", "match_id", "n_rows", "first_ord", "last_ord", "path")
+    def aggCols(ls: String*) = base ++ ls.flatMap(l => Seq(s"n_$l", s"sum_$l"))
+
+    val bounded = SeqMatchOp.matchPattern(rows, "k", "ord", "lab",
+      "click view{1,2} purchase", Some("v"))
+    assert(bounded.columns.toSeq == aggCols("click", "purchase", "view"))
+    val b = bounded.collect()
+    assert(b.length == 1 && b.head.getAs[Int]("n_view") == 2 &&
+      b.head.getAs[Double]("sum_view") == 5.0)
+
+    val permute = SeqMatchOp.matchPattern(rows, "k", "ord", "lab",
+      "PERMUTE(click, purchase)", Some("v"))
+    assert(permute.columns.toSeq == aggCols("click", "purchase"))
+    val p = permute.collect()
+    assert(p.map(_.getString(5)).toSeq == Seq("purchase->click"))
+    assert(p.head.getAs[Int]("n_click") == 1 &&
+      p.head.getAs[Double]("sum_purchase") == 5.0)
+
+    rows.createOrReplaceTempView("labels_spec")
+    val pivot = spark.sql("GRAFT MATCH 'click view{1,2} purchase' ON " +
+      "labels_spec KEY k ORDER ord LABEL lab VALUE v PIVOT COUNT FOR (view)")
+      .collect()
+    assert(pivot.map(_.getAs[Int]("view")).toSeq == Seq(2))
+  }
+
+  test("a VALUE column that is not numeric fails when the plan is built") {
+    val rows = Seq((1L, 1, "a", "x")).toDF("k", "ord", "lab", "v")
+    val e = intercept[IllegalArgumentException](
+      SeqMatchOp.matchPattern(rows, "k", "ord", "lab", "a", Some("v")))
+    assert(e.getMessage.contains("'v'") && e.getMessage.contains("STRING"),
+      e.getMessage)
+    rows.createOrReplaceTempView("value_type_spec")
+    val s = intercept[IllegalArgumentException](spark.sql(
+      "GRAFT MATCH 'a' ON value_type_spec KEY k ORDER ord LABEL lab VALUE v"))
+    assert(s.getMessage.contains("MATCH VALUE column 'v' has type STRING"),
+      s.getMessage)
+  }
 }
